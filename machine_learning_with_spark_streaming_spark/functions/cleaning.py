@@ -38,32 +38,10 @@ def strip_upper(col: Column | str) -> Column:
     return F.upper(F.trim(c))
 
 
-def zfill(col: Column | str, width: int) -> Column:
-    """Zero-pad numeric-like keys (``convertIntToString`` + ``zfill``,
-    myConversionsClass.py:135-142)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lpad(c.cast("string"), width, "0")
-
-
 def lstrip_zeros(col: Column | str) -> Column:
     """Strip leading zeros from numeric SKUs (myDFClass.py:140)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(c.cast("string"), r"^0+(?=.)", "")
-
-
-def strip_suffix(col: Column | str, suffix: str) -> Column:
-    """Remove a literal trailing suffix (pipeline/lib.py:157-159)."""
-    c = F.col(col) if isinstance(col, str) else col
-    import re
-
-    return F.regexp_replace(c, re.escape(suffix) + r"$", "")
-
-
-def strip_unit_suffix(col: Column | str) -> Column:
-    """Strip trailing unit tokens like ``123 EA`` -> ``123``
-    (pipeline/lib.py:161-164)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(c, r"\s*[A-Za-z%]+\s*$", ""))
 
 
 def map_values(

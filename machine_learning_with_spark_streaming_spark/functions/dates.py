@@ -24,13 +24,6 @@ def parse_date_multi(col: Column | str, formats: list[str] | None = None) -> Col
     return F.coalesce(*attempts)
 
 
-def month_floor(col: Column | str) -> Column:
-    """First day of month (``astype('datetime64[M]')``,
-    myConversionsClass.py:617)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trunc(c, "month")
-
-
 def week_floor_monday(col: Column | str) -> Column:
     """Monday of the ISO week (weekday subtraction,
     myConversionsClass.py:622)."""
@@ -49,16 +42,6 @@ def fiscal_month_sort(col: Column | str, start_month: int = 10) -> Column:
     """1..12 position of the month within the Oct-start fiscal year."""
     c = F.col(col) if isinstance(col, str) else col
     return ((F.month(c) - F.lit(start_month) + 12) % 12 + 1).cast("int")
-
-
-def month_window(
-    anchor: Column, start_offset_months: int, end_offset_months: int
-) -> tuple[Column, Column]:
-    """[start, end) month window from an anchor date — the DAX
-    ``EDATE(TODAY(), n)`` windows (FCST_DemandNonBlank1.ps1:24-34).
-    Pass an explicit anchor for reproducible queries."""
-    base = F.trunc(anchor, "month")
-    return F.add_months(base, start_offset_months), F.add_months(base, end_offset_months)
 
 
 # ------------------------------------------------ FY label from free text

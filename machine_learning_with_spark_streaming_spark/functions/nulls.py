@@ -3,13 +3,12 @@
 The reference uses blank -> ``'Blank'`` sentinels before joins
 (``myConversionsClass.py:268,285``), ``NotMapped`` after joins (``:272``),
 ``''``/``'nan'``/``'None'`` literals -> real nulls before DB load
-(``pipeline/SqlUpload_Actuals.py:75-78``), and column-default fills
-(``setNullDefaults``, ``:680-683``).
+(``pipeline/SqlUpload_Actuals.py:75-78``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 NULL_LITERALS = ["", "nan", "None", "NULL", "null", "NaN"]
@@ -35,8 +34,3 @@ def zero_to_null(col: Column | str) -> Column:
 def first_nonzero(*cols: Column | str) -> Column:
     """W5: first non-zero value across an ordered column list."""
     return F.coalesce(*[zero_to_null(c) for c in cols])
-
-
-def set_null_defaults(df: DataFrame, defaults: dict[str, object]) -> DataFrame:
-    """Per-column default fill (myConversionsClass.py:680-683)."""
-    return df.fillna(defaults)

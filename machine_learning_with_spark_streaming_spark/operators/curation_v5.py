@@ -48,13 +48,16 @@ def _stage_row(name: str, docs: DataFrame) -> DataFrame:
     # evaluation per stage (the explode now runs once, for the KMV
     # sketch). Identical values: sum(per-doc count) == count of word
     # rows, and count_distinct over docs with >=1 word == the exploded
-    # countDistinct(doc_id) (NULL when() rows are ignored by
-    # count_distinct, NULL sizes by sum — the NULL-text doc contributes
-    # nothing either way).
+    # countDistinct(doc_id). size() of a NULL-text doc is NULL with
+    # ANSI on but -1 with ANSI off; greatest(0, ...) makes it 0 in both
+    # modes, so that doc contributes nothing either way.
     per_doc = docs.select(
         "doc_id",
-        F.size(
-            F.filter(F.split(normalize_text("text"), " "), lambda w: w != "")
+        F.greatest(
+            F.lit(0),
+            F.size(
+                F.filter(F.split(normalize_text("text"), " "), lambda w: w != "")
+            ),
         ).alias("__nw"),
     )
     mass = per_doc.agg(

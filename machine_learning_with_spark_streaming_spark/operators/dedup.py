@@ -103,15 +103,6 @@ def exact_dedup(
     )
 
 
-def shingles(col: Column | str, n: int = SHINGLE_N) -> Column:
-    """Distinct word n-gram shingles as an inline array column (shifted-
-    slice ``zip_with``; no UDF). Prefer :func:`shingle_table` in
-    pipelines so the word split materializes once per row."""
-    c = F.col(col) if isinstance(col, str) else col
-    ws = F.split(normalize_text(c), " ")
-    return _grams_from_words(ws, n)
-
-
 def jaccard_candidates(
     sh_tab: DataFrame, max_shingle_df: int | None = None
 ) -> DataFrame:
@@ -210,39 +201,6 @@ def jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    n: int = SHINGLE_N,
-) -> DataFrame:
-    """MinHash signature per doc: ``min(xxhash64(xxhash64(shingle), seed_i))``
-    for each of ``num_hashes`` seeds — computed in one pass over exploded
-    shingles (one aggregate, no per-hash scan).
-
-    r11 (guide §1.2 "per-task work"): the shingle STRING (~25 bytes,
-    variable length) is hashed exactly once; the ``num_hashes`` seeded
-    draws re-hash the resulting 8-byte long, which is a short fixed-width
-    xxhash round instead of a string traversal — 16x fewer string hashes
-    for identical statistical behavior (a seeded hash of a uniform
-    64-bit value is as uniform as a seeded hash of the string; the same
-    derivation jaccard_candidates already uses for its index key).
-    Signature VALUES differ from the pre-r11 family; nothing certified
-    depends on them — banding only gates candidate RECALL, which the
-    exhaustive-truth test (tests/test_dedup.py band-probe recall) and
-    the exact-oracle pair certs pin, and the verify step keeps
-    precision at 1.0 by construction."""
-    sh = shingle_table(df, text_col, id_col, n).select(
-        "id", F.explode("sh").alias("shingle")
-    ).select("id", F.xxhash64("shingle").alias("hs"))
-    mins = [
-        F.min(F.xxhash64(F.col("hs"), F.lit(i))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy("id").agg(*mins)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -281,7 +239,8 @@ def minhash_lsh_pairs(
     if persist_shingles:
         sh_tab = sh_tab.persist(StorageLevel.MEMORY_AND_DISK)
     # hash each shingle string once; seeded draws re-hash the 8-byte
-    # long (16x fewer string traversals — see minhash_signatures)
+    # long (16x fewer string traversals; a seeded hash of a uniform
+    # 64-bit value is as uniform as a seeded hash of the string)
     exploded = sh_tab.select("id", F.explode("sh").alias("shingle")).select(
         "id", F.xxhash64("shingle").alias("hs")
     )
@@ -1066,8 +1025,8 @@ def minhash_band_table(
     rows = num_hashes // bands
     tab = sh_tab if sh_tab is not None else shingle_table(df, text_col, id_col, n)
     # hash each shingle string once; seeded draws re-hash the 8-byte
-    # long (16x fewer string traversals — see minhash_signatures). MUST
-    # stay family-identical to minhash_lsh_pairs/minhash_signatures:
+    # long (16x fewer string traversals — see minhash_lsh_pairs). MUST
+    # stay family-identical to minhash_lsh_pairs:
     # incremental probes join this band table against batch signatures.
     exploded = tab.select("id", F.explode("sh").alias("shingle")).select(
         "id", F.xxhash64("shingle").alias("hs")
@@ -1277,7 +1236,7 @@ def minhash_md5_signatures(
 ) -> DataFrame:
     """MinHash signatures from the md5-60-bit base hash + affine
     2-universal family — statistically the same estimator as the
-    xxhash64 production family in :func:`minhash_signatures`, but
+    xxhash64 production family in :func:`minhash_lsh_pairs`, but
     derivable verbatim in ANSI SQL, so the whole estimate can be
     oracle-checked (xxhash64 has no DuckDB equivalent; estimator math
     shouldn't be certified only by the engine that computed it)."""

@@ -16,28 +16,6 @@ from machine_learning_with_spark_streaming_spark.registry import register
 from machine_learning_with_spark_streaming_spark.schemas import load_table
 
 
-def project(df: DataFrame, cols: list[str], fill_missing: float | None = None) -> DataFrame:
-    """P1/P2: projection; absent columns materialize as a constant
-    (``reindex(columns=...)`` + fillna, myConversionsClass.py:29-31)."""
-    existing = set(df.columns)
-    sel = [
-        F.col(c) if c in existing else F.lit(fill_missing).alias(c) for c in cols
-    ]
-    return df.select(*sel)
-
-
-def rename_columns(df: DataFrame, rename_map: dict[str, str]) -> DataFrame:
-    """P3: bulk rename from a config map (pipeline/lib.py:243-283)."""
-    return df.withColumnsRenamed(rename_map)
-
-
-def with_constants(df: DataFrame, constants: dict[str, object]) -> DataFrame:
-    """P4: constant columns from config (pipeline/lib.py:245-246)."""
-    for name, value in constants.items():
-        df = df.withColumn(name, F.lit(value))
-    return df
-
-
 def keep_first_per_key(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
     """P12 (deterministic ``drop_duplicates(subset, keep='first')``):
     explicit ordering, then ``row_number() == 1``."""

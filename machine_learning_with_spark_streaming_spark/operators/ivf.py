@@ -765,15 +765,7 @@ def _centroid_values(centroids: list[list[float]]) -> str:
     return ",\n  ".join(rows)
 
 
-def _kmeans_centroid_values() -> str:
-    from machine_learning_with_spark_streaming_spark.functions.ml_artifacts import (
-        KMEANS_CENTROIDS,
-    )
-
-    return _centroid_values(KMEANS_CENTROIDS)
-
-
-def _semdedup_oracle(centroid_values: str | None = None) -> str:
+def _semdedup_oracle(centroid_values: str) -> str:
     from machine_learning_with_spark_streaming_spark.operators.similarity import (
         _DUP_CORPUS_SQL,
     )
@@ -781,7 +773,7 @@ def _semdedup_oracle(centroid_values: str | None = None) -> str:
     return f"""
 WITH {_DUP_CORPUS_SQL},
 kcent(cluster, centroid) AS (VALUES
-  {centroid_values or _kmeans_centroid_values()}
+  {centroid_values}
 ),
 v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
@@ -810,30 +802,6 @@ SELECT CAST(a.vec_id AS BIGINT) AS vec_id, CAST(a.cluster AS INT) AS cluster,
 FROM assigned a LEFT JOIN losers l ON l.vec_id = a.vec_id
 ORDER BY 1
 """
-
-
-def q_semdedup_fixed_k_demo(spark, sf_dir):
-    """SemDeDup with the fixed 4-centroid demo quantizer — DEREGISTERED
-    in r8 (was ``dedup_semantic``, hash-certified r3–r7). A fixed k
-    leaves the within-cluster pair join quadratic in the corpus
-    (builder's stress rows: 92–136 s where the k32 form is 18–22 s), so
-    the registry's only SemDeDup name is the scale-true
-    ``dedup_semantic_k32``. This form survives unregistered as the
-    measured anti-pattern contrast (tests/test_llm_data_ops.py pins the
-    keep policy on planted balls; EXPLAIN.md records the stress
-    numbers)."""
-    from machine_learning_with_spark_streaming_spark.operators.similarity import (
-        embeddings_with_duplicates,
-    )
-
-    corpus = embeddings_with_duplicates(spark, sf_dir)
-    return semdedup(corpus).orderBy("vec_id")
-
-
-# DuckDB oracle for the demo form, kept for ad-hoc parity checks
-# (tools/verify_all.py can't reach it once deregistered; the k32 oracle
-# below is the certified one).
-Q_SEMDEDUP_FIXED_K_DEMO_ORACLE = _semdedup_oracle()
 
 
 def _semdedup_k32_oracle() -> str:

@@ -578,90 +578,6 @@ def q_interval_join(spark, sf_dir):
     ).orderBy("error_id", "click_id")
 
 
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_time: str,
-    right_time: str,
-    value_cols: dict[str, str],
-    bucket_sec: int,
-    strict: bool = False,
-) -> DataFrame:
-    """Skew-hardened as-of join: identical semantics to :func:`asof_join`
-    but the per-key window sort is salted by a coarse time bucket, so a
-    single hot key no longer serializes into one task.
-
-    Two passes:
-
-    1. carry-forward *within* each (key, time-bucket) partition — the
-       heavy row-level sort, now parallel across a hot key's buckets;
-    2. a bucket-level seed table (last right payload per (key, bucket),
-       carried across buckets with a second window over one row per
-       bucket — thousands of times smaller than the row stream) supplies
-       the match for left rows whose bucket holds no earlier right row.
-
-    ``bucket_sec`` trades parallelism (smaller → more buckets) against
-    seed-table size; pick roughly (key's time span) / (desired tasks).
-    Same right-side uniqueness contract as :func:`asof_join`.
-    """
-    r_ord, l_ord = (0, 1) if not strict else (1, 0)
-    payload = F.struct(*[F.col(c) for c in value_cols])
-    bucket = lambda t: F.floor(F.unix_timestamp(F.col(t)) / F.lit(bucket_sec))  # noqa: E731
-    rt = right.select(
-        *[F.col(k) for k in on],
-        F.col(right_time).alias("__t"),
-        F.lit(r_ord).alias("__ord"),
-        F.lit(False).alias("__is_left"),
-        payload.alias("__payload"),
-        bucket(right_time).alias("__bk"),
-    )
-    lt = left.select(
-        *left.columns,
-        F.col(left_time).alias("__t"),
-        F.lit(l_ord).alias("__ord"),
-        F.lit(True).alias("__is_left"),
-        bucket(left_time).alias("__bk"),
-    )
-    u = lt.unionByName(rt, allowMissingColumns=True)
-
-    w_in = (
-        Window.partitionBy(*on, "__bk")
-        .orderBy("__t", "__ord")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    matched = u.withColumn("__m", F.last("__payload", ignorenulls=True).over(w_in))
-
-    # bucket-level seeds: last right payload per (key, bucket), then the
-    # most recent non-null seed from STRICTLY earlier buckets
-    seeds = rt.groupBy(*on, "__bk").agg(
-        F.max_by("__payload", F.struct("__t", "__ord")).alias("__last")
-    )
-    bucket_rows = u.select(*on, "__bk").distinct()
-    w_seed = (
-        Window.partitionBy(*on)
-        .orderBy("__bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    seed_tab = bucket_rows.join(seeds, [*on, "__bk"], "left").select(
-        *on,
-        "__bk",
-        F.last("__last", ignorenulls=True).over(w_seed).alias("__seed"),
-    )
-
-    return (
-        matched.filter(F.col("__is_left"))
-        .join(seed_tab, [*on, "__bk"], "left")
-        .select(
-            *left.columns,
-            *[
-                F.coalesce(F.col(f"__m.{src}"), F.col(f"__seed.{src}")).alias(dst)
-                for src, dst in value_cols.items()
-            ],
-        )
-    )
-
-
 # ------------------------------------------------- IN-list scan pushdown
 
 

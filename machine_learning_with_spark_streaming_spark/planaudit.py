@@ -1,7 +1,8 @@
 """Physical-plan diagnostics: detect scale-killer shapes in a plan tree.
 
-The whole-registry plan audit (tests/test_plan_audit.py) greps executed
-plans for patterns that silently survive small-SF correctness checks but
+The per-query plan audit (tests/test_plan_audit.py, run on every
+registered query by tests/test_entry_contract.py) greps executed plans
+for patterns that silently survive small-SF correctness checks but
 detonate at cluster scale. The string checks (CartesianProduct,
 BatchEvalPython) live in the test; this module holds the one check that
 needs tree structure: an ``Exchange SinglePartition`` feeding a

@@ -131,7 +131,8 @@ def _scan_spread(
     # on a cluster is a directory of files; the single-file assumption
     # would raise IsADirectoryError exactly in the few-huge-files case
     # the spread targets). Any metadata failure falls back to no spread
-    # — the scan is still correct, just narrow.
+    # — the scan is still correct, just narrow — and is not cached, so
+    # the next load retries the read.
     import os
 
     try:
@@ -147,7 +148,6 @@ def _scan_spread(
             n_rows, n_bytes = _parquet_meta(path)
             cur = df.rdd.getNumPartitions()
         except Exception:
-            _SPREAD_CACHE[cache_key] = 0
             return df
         if 2 * cur >= par:
             # splittable input — cluster path, leave the scan alone
@@ -276,16 +276,6 @@ def _load_nanos_parquet(spark: SparkSession, path: str) -> DataFrame:
         pq.write_table(t.cast(pa.schema(fields), safe=False), tmp)
         os.replace(tmp, cached)
     return spark.read.parquet(cached)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register testdata tables as temp views for the SQL API."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)
 
 
 # --- streaming payload (reference Dataset/stream.py:150-177) -------------

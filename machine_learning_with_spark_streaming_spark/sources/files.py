@@ -296,20 +296,6 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).orc(path)
 
 
-def write_with_error_side_output(
-    df: DataFrame, error_predicate, path: str, error_path: str, mode: str = "overwrite"
-) -> None:
-    """K8: main sink + error side-output from the same DAG
-    (myConversionsClass.py:273-276): write good rows and bad rows as two
-    filters of one cached plan."""
-    df = df.persist()
-    try:
-        df.filter(~error_predicate).write.mode(mode).option("header", "true").csv(path)
-        df.filter(error_predicate).write.mode(mode).option("header", "true").csv(error_path)
-    finally:
-        df.unpersist()
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,

@@ -230,19 +230,19 @@ def _register_k10():
         report = expire_snapshots(spark, base, keep_last=2)
 
         # invariants, asserted not returned: newest still readable,
-        # purged history unresolvable. r12 (guide §1.2): ONE read of the
-        # rewritten log answers both resolve questions (resolve only
-        # consults the log, so "no version <= 2 in the log" IS
-        # "resolve_asof(2) raises"); was 3 jobs (resolve 99 + resolve 2
-        # + count), now 2 (log read + count).
+        # purged history unresolvable — the latter through the shipped
+        # resolve path, so the resolve rule itself is what gets certified.
         kept_versions = [
             int(r["version"])
             for r in spark.read.parquet(f"{base}_log").select("version").collect()
         ]
         assert max(kept_versions) == 4
-        assert not [v for v in kept_versions if v <= 2], (
-            "purged version must not resolve"
-        )
+        try:
+            resolve_asof_many(spark, base, [2])
+        except ValueError:
+            pass
+        else:
+            raise AssertionError("purged version must not resolve")
         snap = spark.read.parquet(os.path.join(base, "v=4"))
         assert snap.count() == report[-1][2]
 

@@ -73,17 +73,6 @@ def sessionized_aggregate(
     )
 
 
-def dedup_stream(
-    events: DataFrame, keys: list[str], watermark: str = "10 minutes", ts_col: str = "ts"
-) -> DataFrame:
-    """Streaming exact dedup: watermark bounds the key state."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-        return df.dropDuplicatesWithinWatermark(keys)
-    return df.dropDuplicates(keys)
-
-
 def foreach_batch_append(path: str, format: str = "parquet"):
     """foreachBatch sink: plain append per micro-batch."""
 

@@ -162,52 +162,6 @@ def test_interval_join_disjoint_keys_empty(spark):
     )
 
 
-def test_asof_join_salted_equals_plain(spark):
-    """Salted as-of == plain as-of on randomized keyed timelines, for
-    several bucket widths (including widths smaller than gaps between
-    right rows, which exercises the cross-bucket seed path)."""
-    import random
-
-    from machine_learning_with_spark_streaming_spark.operators.joins import (
-        asof_join,
-        asof_join_salted,
-    )
-
-    rng = random.Random(13)
-    lrows = [
-        (i, rng.randrange(4), rng.randrange(0, 100000))
-        for i in range(120)
-    ]
-    rmap = {}
-    for _ in range(60):
-        k, t = rng.randrange(4), rng.randrange(0, 100000)
-        rmap[(k, t)] = rng.randrange(1000)
-    left = spark.createDataFrame(
-        [(i, k, t) for i, (k, t) in [(i, (k, t)) for i, k, t in lrows]],
-        "lid long, k long, s long",
-    ).select("lid", "k", F.timestamp_seconds("s").alias("t"))
-    right = spark.createDataFrame(
-        [(k, t, v) for (k, t), v in rmap.items()], "k long, s long, v long"
-    ).select("k", F.timestamp_seconds("s").alias("t"), "v")
-
-    for strict in (False, True):
-        plain = {
-            r["lid"]: r["mv"]
-            for r in asof_join(
-                left, right, ["k"], "t", "t", {"v": "mv"}, strict=strict
-            ).collect()
-        }
-        for bucket_sec in (1000, 7, 200000):
-            salted = {
-                r["lid"]: r["mv"]
-                for r in asof_join_salted(
-                    left, right, ["k"], "t", "t", {"v": "mv"},
-                    bucket_sec=bucket_sec, strict=strict,
-                ).collect()
-            }
-            assert salted == plain, (strict, bucket_sec)
-
-
 def test_symspell_join_covers_all_edit1_kinds(spark):
     from machine_learning_with_spark_streaming_spark.operators.joins import symspell_join
 

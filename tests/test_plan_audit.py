@@ -22,8 +22,9 @@ classes of mistake that silently survive correctness checks:
   column fails until it is consciously allowlisted here — prefer
   exact integer micro-units (the v14/text-classifier recipe).
 
-All four checks run in one pass so the registry's ~170 DataFrames are
-built exactly once.
+``audit_plan_and_schema`` runs all four on the one DataFrame that
+``test_entry_contract.py``'s ``built`` fixture makes per query;
+``test_query_runs`` asserts the result.
 """
 
 from pyspark.sql import Window
@@ -66,7 +67,7 @@ DOUBLE_OUTPUT_ALLOWLIST = {
     "dedup_jaccard_prefix_filter": ["jaccard"],
     # rounded cosine vs the k=32 frozen artifact; swept green at sf0.01
     # and sf0.1 --shuffle 5 (r7). The fixed-k demo form was deregistered
-    # in r8 (quadratic pair join — see ivf.py:q_semdedup_fixed_k_demo).
+    # in r8 (quadratic pair join).
     "dedup_semantic_k32": ["centroid_sim"],
     # r7 additions, all swept at sf0.1 --shuffle 5: 6-dp-rounded terms
     # from exact-integer operands (PSI log-ratio terms; guarded MoM
@@ -225,40 +226,25 @@ DOUBLE_OUTPUT_ALLOWLIST = {
 }
 
 
-def _double_cols(df):
-    return sorted(
+def audit_plan_and_schema(name, df) -> list[str]:
+    """All four checks on ``df``'s plan and output schema, read without
+    running an action; returns the offences found."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    offences = unbounded_single_partition_windows(plan)
+    offences += [p for p in ("CartesianProduct", "BatchEvalPython") if p in plan]
+    extra = [
         f.name
         for f in df.schema.fields
         if isinstance(f.dataType, (DoubleType, FloatType))
-    )
-
-
-def test_registry_plan_and_schema_audit(spark, sf_dir):
-    import __spark_entry__ as entry
-
-    offenders: dict[str, str] = {}
-    for name, fn in entry.queries().items():
-        df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
-            offenders[name] = "CartesianProduct"
-        elif "BatchEvalPython" in plan:
-            offenders[name] = "BatchEvalPython (row-at-a-time UDF)"
-        bad_windows = unbounded_single_partition_windows(plan)
-        if bad_windows:
-            offenders[name] = bad_windows[0]
-        extra = [
-            c
-            for c in _double_cols(df)
-            if c not in DOUBLE_OUTPUT_ALLOWLIST.get(name, [])
-        ]
-        if extra:
-            offenders[name] = (
-                f"unallowlisted DOUBLE output columns {extra} — use exact "
-                "integer micro-units or extend DOUBLE_OUTPUT_ALLOWLIST "
-                "after a cross-engine sf0.1 --shuffle 5 sweep"
-            )
-    assert not offenders, offenders
+        and f.name not in DOUBLE_OUTPUT_ALLOWLIST.get(name, [])
+    ]
+    if extra:
+        offences.append(
+            f"unallowlisted DOUBLE output columns {extra} — use exact "
+            "integer micro-units or extend DOUBLE_OUTPUT_ALLOWLIST "
+            "after a cross-engine sf0.1 --shuffle 5 sweep"
+        )
+    return offences
 
 
 # ------------------------- seeded regressions for the audit itself

@@ -86,6 +86,14 @@ def test_v5_stage_row_scalar_mass_equals_exploded(spark):
     assert row["n_docs"] == exploded["n_docs"] == 3
     assert row["word_mass"] == exploded["word_mass"] == 7
 
+    # with ANSI off size(NULL) is -1: the NULL-text doc still adds nothing
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        row = _stage_row("s", docs).collect()[0]
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+    assert (row["n_docs"], row["word_mass"]) == (3, 7)
+
 
 # ------------------------------------------------- curation_v4 NULL fp
 
@@ -109,7 +117,7 @@ def test_v4_null_fingerprint_doc_not_canonical(spark):
 # ------------------------------------------------- scan-spread hardening
 
 
-def test_scan_spread_directory_layout_no_raise(spark, tmp_path):
+def test_scan_spread_directory_layout_no_raise(spark, tmp_path, monkeypatch):
     # a directory-layout table (the cluster shape) must not raise and
     # must produce directory-aware metadata; the decision is cached
     from machine_learning_with_spark_streaming_spark import schemas
@@ -132,3 +140,12 @@ def test_scan_spread_directory_layout_no_raise(spark, tmp_path):
     assert key in schemas._SPREAD_CACHE
     rows, size = schemas._parquet_meta(path)
     assert rows == 2000 and size > 0
+
+    # a failed metadata read is not cached, so a later load can spread
+    one = os.path.join(str(tmp_path), "one.parquet")
+    spark.range(2000).coalesce(1).write.parquet(one)
+    df = spark.read.parquet(one)
+    monkeypatch.setattr(schemas, "_parquet_meta", lambda p: 1 / 0)
+    assert schemas._scan_spread(spark, df, one, "documents") is df
+    monkeypatch.undo()
+    assert schemas._scan_spread(spark, df, one, "documents") is not df
