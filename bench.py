@@ -1,6 +1,10 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Benchmark harness: benched queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+
+Usage:
+    python bench.py               # HEADLINE + every @register(..., bench=True)
+    python bench.py NAME [NAME]   # only these queries; bench_full.json untouched
 
 Prints ONE JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -14,7 +18,8 @@ sf0.1 yet irrelevant on a cluster where the same compiled plan runs for
 minutes) and then timed: headline queries MEDIAN-of-3 (the cross-round
 metric — median bounds co-tenant noise without min's optimistic bias),
 extended queries min-of-2, long-runners min-of-1; ``value`` = total
-steady-state seconds across the fixed r1 headline set. Per-query noise
+steady-state seconds across the fixed r1 headline set. ``jobs`` maps each
+query to the Spark jobs its last timed run submitted. Per-query noise
 floors are recorded in BASELINE.md — deltas inside them are drift, not
 regression.
 """
@@ -25,10 +30,12 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from machine_learning_with_spark_streaming_spark.registry import collect  # noqa: E402
 from machine_learning_with_spark_streaming_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -56,266 +63,6 @@ HEADLINE = [
     "pipeline_llm_data_prep",
 ]
 
-# Added round 2 (no r1 baseline; first driver-recorded in BENCH_r02).
-# Timed and reported per-query + in ``value_all``, excluded from ``value``.
-EXTENDED = [
-    "j10_asof_join",
-    "dedup_connected_components",
-    "text_repetition",
-    "pii_redact",
-    "pipeline_llm_data_prep_v2",
-    "j12_salted_skew_join",
-    "a15_salted_two_phase_agg",
-    "a16_incremental_rollup",
-]
-
-# Added round 3 (first driver-recorded in BENCH_r03): the heavy ops that
-# gained oracles/certification in r2-r3, plus one REAL multi-micro-batch
-# streaming run so stream-machinery regressions show up in bench.
-EXTENDED += [
-    "pack_token_budget_exact",
-    "text_unigram_logprob",
-    "text_chunk_windows",
-    "dedup_repeated_chunks",
-    "s11_tumbling_window_stream",
-    "j14_inlist_pushdown_join",
-    "sim_quantize_int8",
-    "sample_shard_assignment",
-    "text_perplexity_buckets",
-    "pipeline_training_mix",
-    "text_dsir_weights",
-]
-
-# Added late round 3 (first driver-recorded in BENCH_r03): the
-# segment-rewrite dedup (explode-heavy), the hashed-linear quality
-# filter, the shingle-index source-overlap matrix, and the BPE pair
-# counter — the non-trivial plans among the late-r3 curation ops.
-EXTENDED += [
-    "dedup_segments_rewrite",
-    "text_quality_classifier",
-    "dedup_source_overlap",
-    "text_bpe_pair_counts",
-    "sample_range_layout",
-]
-
-# Added in the round-3 close: the frozen-vocab tokenizer apply (the
-# heaviest pure-expression op — a per-character fold over every word),
-# the incremental LSH probe, and the real-codec pixel/sample stages.
-EXTENDED += [
-    "text_subword_tokenize",
-    "dedup_incremental_minhash",
-    "mm_resize_bmp",
-    "mm_wav_frame_rms",
-    "pipeline_rag_index",
-    "pipeline_tokenize_pack",
-    "s11_pack_stream",
-    "v11_incremental_datasheet",
-    "v12_cdc_apply",
-    "emb_centroid_drift",
-    "sim_topk_multiprobe",
-    "sample_negatives",
-    "sample_length_batches",
-]
-
-# Added round 4 (first driver-recorded in BENCH_r04): the new PQ-ADC
-# ANN pair, plus the remaining heavy r3-close ops — semantic dedup, the
-# two-arm ANN recall eval, the MAD gate, the (post-integer-ppm-fix)
-# histogram drift, a second real streaming run (session windows), and
-# the thumbnail image dedup.
-EXTENDED += [
-    "text_cms_heavy_hitters",
-    "sim_ivfpq_topk",
-    "sim_pq_codes",
-    "sim_pq_adc_topk",
-    "sim_ann_recall",
-    "v13_mad_outliers",
-    "v14_histogram_drift",
-    "s11_session_window_stream",
-    "mm_image_dedup",
-]
-
-# Added round 5: the CDC segmenter (two per-doc windows + keeper
-# election), the batched multi-query ADC serving path, the full
-# cluster->keeper decision pipeline (LSH + connected components +
-# per-cluster argmax), and the deterministic epoch shuffle (the
-# training-reader order table; map + bounded per-shard sort).
-EXTENDED += [
-    "dedup_segments_cdc",
-    "sim_pq_adc_topk_many",
-    "dedup_canonical_keeper",
-    "sample_epoch_shuffle",
-    "mm_image_near_dup",
-    "mm_audio_near_dup",
-    "r6_linear_interpolate",
-    "pipeline_llm_data_prep_v3",
-]
-# round-6 additions (first-baselined this round)
-EXTENDED += [
-    "r7_ohlc_resample",
-    "text_word_entropy",
-    "v15_k_anonymity_gate",
-    "emb_truncate_renorm",
-    "s19_hive_partitioned_roundtrip",
-    "s11_late_data_stream",
-    "v16_referential_integrity",
-    "s20_malformed_jsonl",
-    "w9_time_weighted_avg",
-    "sim_binary_hamming_topk",
-    "a18_cube_grouping",
-    "ml_linear_trend",
-    "w10_percentile_normalize",
-    "v17_ks_drift",
-    "s21_multiline_json_array",
-    "sample_poisson_bootstrap",
-    "pipeline_eval_holdout",
-    "s11_jdbc_upsert_stream",
-    "dedup_cluster_stats",
-    "w11_ewma_smooth",
-    "v19_observed_metrics",
-    "s22_dynamic_partition_overwrite",
-    "text_langid_confusion",
-]
-# round-7 additions (first-baselined this round)
-EXTENDED += [
-    "dedup_semantic_k32",
-    "v20_psi_drift",
-    "v21_benford_digits",
-    "w12_mom_pct_change",
-    "ml_corr_matrix",
-    "text_shingle_novelty",
-    "j16_asof_tolerance_join",
-    "dedup_minhash_calibration",
-    "emb_dim_stats",
-    "a19_share_of_total",
-    "v22_time_gap_report",
-    "graph_triangle_count",
-    "emb_whiten_frozen",
-    "pipeline_drift_monitor",
-    "ml_tree_score",
-    "sample_balanced_classes",
-    "s11_drift_monitor_stream",
-    "graph_pagerank",
-]
-
-# Added round 8 (first driver-recorded in BENCH_r08): the checkpointed
-# deep-k PageRank and the certified 100 TB approx-profiling forms.
-EXTENDED += [
-    "graph_pagerank_k10",
-    "a14_group_percentiles_approx",
-    "v10_column_profile_approx",
-    "v13_mad_outliers_approx",
-    "text_corpus_datasheet_approx",
-    "v23_candidate_keys",
-    "v24_fd_report",
-    "w13_holt_brown",
-    "a20_weighted_quantiles",
-    "w14_forecast_backtest",
-]
-
-# Added round 9: the alpha-grid forecaster (two-Window one-exchange grid
-# plan) and the rewritten Arrow/numpy IVF assignment path. w16/w17 share
-# their plan shapes with already-benched cousins (w13/w14) and stay out
-# to keep bench wall-clock lean.
-EXTENDED += [
-    "w15_alpha_grid_forecast",
-    "sim_ivf_cell_stats",
-]
-
-# Added round 10: the stored cell-partitioned IVF serving path (static
-# partition pruning + Arrow exact rescore — the 100 TB read shape).
-EXTENDED += [
-    "sim_topk_ivf_stored",
-]
-
-# Added round 10 (second wave): distributed training/eval metrics, the
-# bloom pre-join, bounded-round graph peeling, the robust-trend pair,
-# the quantizer refit loop, and the MG heavy-hitters stream.
-EXTENDED += [
-    "ml_naive_bayes",
-    "ml_auc_rank",
-    "j17_bloom_prejoin",
-    "graph_kcore_peel",
-    "w20_theilsen_trend",
-    "w21_mann_kendall",
-    "sim_ivf_refit_step",
-]
-
-# Added round 10 (third wave): sketch re-aggregation, runtime partition
-# pruning, LPA communities, and the MG heavy-hitters stream (long tier).
-EXTENDED += [
-    "a21_hll_reaggregate",
-    "j18_dpp_partition_join",
-    "graph_label_propagation",
-    "s11_heavy_hitters_stream",
-    "text_pmi_collocations",
-    "sim_matryoshka_recall",
-    "dedup_incremental_bloom",
-    "sample_kfold_assign",
-    "u4_bag_set_ops",
-]
-
-# Added round 10 (continuation): gaps-and-islands streaks, chi-square
-# independence, blocked edit-distance entity resolution.
-EXTENDED += [
-    "w22_order_streaks",
-    "v25_chi2_independence",
-    "dedup_blocked_editdist",
-    "w23_rolling_median",
-    "w24_acf_lags",
-    "ml_knn_confusion",
-    "graph_link_prediction",
-    "s23_time_travel_read",
-    "w25_winsorized_mean",
-    "s24_event_transitions",
-    "text_readability",
-    "graph_bfs_distance",
-    "a22_mode_per_group",
-    "graph_assortativity",
-    "s11_transitions_stream",
-    "w26_rolling_mad",
-    "k10_snapshot_expire",
-    "ml_knn_calibration",
-    "s25_python_datasource",
-    "k11_merge_into",
-    "w27_robust_stl",
-    "pipeline_curation_v4",
-    "sample_diverse_seeds",
-    "w28_max_drawdown",
-    "w29_interval_coverage",
-    "ml_pr_curve",
-    "sample_hard_negatives",
-    "diag_join_cardinality",
-    "v26_monotonic_violations",
-    "s11_merge_into_stream",
-    "emb_pca_residual_topk",
-    "a23_equi_depth_histogram",
-    "s26_funnel_latency",
-    "emb_fisher_scores",
-    "k12_write_audit_publish",
-    "sample_triplets",
-    "sql_q3_shipping_priority",
-    "f13_variant_props",
-    "s27_store_schema_evolution",
-]
-
-# Added round 11: the signature shapes through the SQL front door, and
-# the histogram-bucketed AUC (score-cardinality-independent window).
-EXTENDED += [
-    "sql_rollup_grand_total",
-    "sql_qc_verdict",
-    "sql_abc_classify",
-    "ml_auc_bucketed",
-    "ml_pr_bucketed",
-    # KMV sketch family (exact-certified estimators), calibration, and
-    # the lossless prefix-filtered Jaccard join
-    "a24_kmv_set_ops",
-    "a25_kmv_reaggregate",
-    "ml_calibration_bins",
-    "s11_kmv_distinct_stream",
-    "dedup_jaccard_prefix_filter",
-]
-
-
 # Long-runner tier: wall-clock here is dominated by iteration count
 # (10 checkpointed PageRank rounds) or real micro-batch scheduling (a
 # 6-batch watermark run), not by per-row compute — the min-of-2 repeat
@@ -339,12 +86,52 @@ def _sf_from_dir(path: str) -> float:
         return -1.0
 
 
+def benched() -> list[str]:
+    """HEADLINE, then every query registered with ``bench=True``."""
+    return HEADLINE + [name for name, rq in collect().items() if rq.bench]
+
+
 def run_query(df) -> None:
     # full-plan execution without collecting results to the driver
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
+def measure(spark, fn, sf_dir: str, n_timed: int) -> tuple[list[float], int]:
+    """One untimed warm-up of ``fn(spark, sf_dir)``, then ``n_timed`` timed
+    runs. Returns the sorted run seconds and the number of Spark jobs the
+    last timed run submitted."""
+    sc = spark.sparkContext
+    runs: list[float] = []
+    jobs = 0
+    try:
+        run_query(fn(spark, sf_dir))  # untimed: codegen + JIT
+        for _ in range(n_timed):
+            # clear BEFORE each timed run too: queries that persist
+            # intermediates (LSH shingle table) must not be timed
+            # against stacked stale copies from the warm-up
+            spark.catalog.clearCache()
+            group = f"bench-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, fn.__name__)
+            t0 = time.time()
+            run_query(fn(spark, sf_dir))
+            runs.append(time.time() - t0)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+        # Queries that persist intermediates (e.g. the LSH shingle
+        # table) would otherwise stack storage blocks across the
+        # run; the resulting eviction/GC churn was measured as 2-4x
+        # run-to-run timing swings on the dedup family.
+        spark.catalog.clearCache()
+    return sorted(runs), jobs
+
+
+def main(argv: list[str]) -> None:
+    queries = entry_mod.queries()
+    names = argv or benched()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        raise SystemExit(f"unknown query: {', '.join(unknown)}")
     # progress-bar rendering costs ~0.1 s of wall time per timed query
     # (measured r7: 14-query headline 13.6 s with the bar vs 12.05
     # without, same plans) — terminal I/O, not query work; exclude it
@@ -352,50 +139,34 @@ def main() -> None:
         "machine-learning-with-spark-streaming-bench",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    queries = entry_mod.queries()
-    names = [n for n in HEADLINE + EXTENDED if n in queries]
 
     timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     errors: dict[str, str] = {}
     for name in names:
+        # Headline tier: MEDIAN of 3 timed runs — the headline number
+        # is the cross-round comparison metric, and a single driver
+        # run wanders ±13-20% under co-tenancy (three quiesced r9
+        # runs of identical code: 10.15/12.83/11.39 s); the median
+        # damps one-sided outliers without min's optimistic bias.
+        # Extended tier stays min-of-2 (regression signal per query,
+        # bench wall-clock bounded); long-runners min-of-1
+        # (iteration/stream scheduling dominates, repeats buy no
+        # signal).
+        if name in LONG_RUNNERS:
+            n_timed = 1
+        elif name in HEADLINE:
+            n_timed = 3
+        else:
+            n_timed = 2
         # a single failing query must not wipe out the whole bench record
         try:
-            run_query(queries[name](spark, SF_DIR))  # untimed: codegen + JIT
-            # Headline tier: MEDIAN of 3 timed runs — the headline number
-            # is the cross-round comparison metric, and a single driver
-            # run wanders ±13-20% under co-tenancy (three quiesced r9
-            # runs of identical code: 10.15/12.83/11.39 s); the median
-            # damps one-sided outliers without min's optimistic bias.
-            # Extended tier stays min-of-2 (regression signal per query,
-            # bench wall-clock bounded); long-runners min-of-1
-            # (iteration/stream scheduling dominates, repeats buy no
-            # signal).
-            runs: list[float] = []
-            if name in LONG_RUNNERS:
-                n_timed = 1
-            elif name in HEADLINE:
-                n_timed = 3
-            else:
-                n_timed = 2
-            for _ in range(n_timed):
-                # clear BEFORE each timed run too: queries that persist
-                # intermediates (LSH shingle table) must not be timed
-                # against stacked stale copies from the warm-up
-                spark.catalog.clearCache()
-                t0 = time.time()
-                run_query(queries[name](spark, SF_DIR))
-                runs.append(time.time() - t0)
-            runs.sort()
-            stat = runs[len(runs) // 2] if name in HEADLINE else runs[0]
-            timings[name] = round(stat, 3)
+            runs, jobs[name] = measure(spark, queries[name], SF_DIR, n_timed)
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-        finally:
-            # Queries that persist intermediates (e.g. the LSH shingle
-            # table) would otherwise stack storage blocks across the
-            # run; the resulting eviction/GC churn was measured as 2-4x
-            # run-to-run timing swings on the dedup family.
-            spark.catalog.clearCache()
+            continue
+        stat = runs[len(runs) // 2] if name in HEADLINE else runs[0]
+        timings[name] = round(stat, 3)
 
     total = round(sum(v for n, v in timings.items() if n in HEADLINE), 3)
     # The driver's BENCH_r*.json keeps only the last 2,000 chars of stdout
@@ -408,6 +179,7 @@ def main() -> None:
     # slowest queries, any errors — sized well under 2,000 chars.
     full: dict[str, object] = {
         "queries": timings,
+        "jobs": jobs,
         "errors": errors,
         "metric": "headline_total_sec",
         "unit": "sec",
@@ -417,11 +189,12 @@ def main() -> None:
         "sf": _sf_from_dir(SF_DIR),
     }
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
-    try:
-        with open(full_path, "w") as f:
-            json.dump(full, f, indent=1)
-    except OSError:
-        pass  # read-only checkout: stdout summary still carries the headline
+    if not argv:  # a named subset must not replace the full record
+        try:
+            with open(full_path, "w") as f:
+                json.dump(full, f, indent=1)
+        except OSError:
+            pass  # read-only checkout: stdout summary still carries the headline
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
     # Driver contract: ONE JSON line carrying the FULL per-query map —
     # entries are only ever ADDED across rounds, never removed or renamed.
@@ -441,6 +214,7 @@ def main() -> None:
         "timing": "headline_median_of_3",
         "n_benched": len(timings),
         "full": "bench_full.json",
+        "jobs": jobs,
         "queries": timings,
         "slowest": slowest,
         "value_all": round(sum(timings.values()), 3),
@@ -458,4 +232,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

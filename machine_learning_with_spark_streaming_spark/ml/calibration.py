@@ -145,7 +145,7 @@ ORDER BY bin
 """
 
 
-@register("ml_calibration_bins", oracle=_CALIBRATION_ORACLE)
+@register("ml_calibration_bins", oracle=_CALIBRATION_ORACLE, bench=True)
 def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram + ECE for the frozen logreg class-0 scorer
     over the embeddings corpus — all-BIGINT, window-free, O(bins)

@@ -345,7 +345,7 @@ FROM agg ORDER BY 1
 """
 
 
-@register("ml_linear_trend", oracle=_TREND_ORACLE)
+@register("ml_linear_trend", oracle=_TREND_ORACLE, bench=True)
 def q_linear_trend(spark, sf_dir):
     """Per-event-type value-vs-time linear trend (slope per day +
     intercept), closed-form from one aggregate pass."""
@@ -468,7 +468,7 @@ ORDER BY 1, 2
 """
 
 
-@register("ml_corr_matrix", oracle=_corr_oracle())
+@register("ml_corr_matrix", oracle=_corr_oracle(), bench=True)
 def q_corr_matrix(spark, sf_dir):
     """Deterministic Pearson correlation matrix over the four lineitem
     measures (integer-exact sufficient statistics, one aggregate pass)."""
@@ -538,7 +538,7 @@ FROM embeddings ORDER BY 1
 """
 
 
-@register("ml_tree_score", oracle=_tree_oracle())
+@register("ml_tree_score", oracle=_tree_oracle(), bench=True)
 def q_tree_score(spark, sf_dir):
     """Frozen decision tree scored as one compiled when-chain over the
     embeddings table (29-node maxDepth-4 artifact; per-row prediction +

@@ -217,7 +217,7 @@ FROM pred GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@register("ml_naive_bayes", oracle=_NB_ORACLE)
+@register("ml_naive_bayes", oracle=_NB_ORACLE, bench=True)
 def q_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial Naive Bayes language classifier trained AND evaluated
     in one declarative plan over the documents table (reference
@@ -303,7 +303,7 @@ FROM terms
 """
 
 
-@register("ml_auc_rank", oracle=_AUC_ORACLE)
+@register("ml_auc_rank", oracle=_AUC_ORACLE, bench=True)
 def q_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC-AUC of the frozen logreg class-0 margin as a one-vs-rest
     detector for label 0, computed distributively from rank statistics
@@ -402,7 +402,7 @@ FROM cum ORDER BY 1
 """
 
 
-@register("ml_pr_curve", oracle=_PR_ORACLE)
+@register("ml_pr_curve", oracle=_PR_ORACLE, bench=True)
 def q_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision-recall curve of the frozen logreg class-0 margin at
     every distinct threshold — the thresholded companion to
@@ -498,7 +498,7 @@ FROM terms
 """
 
 
-@register("ml_auc_bucketed", oracle=_AUC_BUCKETED_ORACLE)
+@register("ml_auc_bucketed", oracle=_AUC_BUCKETED_ORACLE, bench=True)
 def q_auc_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC-AUC of the frozen logreg class-0 margin from a fixed-width
     score histogram — the 100 TB-safe form of ml_auc_rank: the rank-sum
@@ -587,7 +587,7 @@ FROM cum ORDER BY 1
 """
 
 
-@register("ml_pr_bucketed", oracle=_PR_BUCKETED_ORACLE)
+@register("ml_pr_bucketed", oracle=_PR_BUCKETED_ORACLE, bench=True)
 def q_pr_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed PR curve of the frozen logreg class-0 margin — the
     curve stays readable (and the window bounded) at any corpus size:

@@ -446,7 +446,7 @@ FROM lineitem GROUP BY 1 ORDER BY 1
 """
 
 
-@register("a14_group_percentiles_approx", oracle=_A14_APPROX_ORACLE)
+@register("a14_group_percentiles_approx", oracle=_A14_APPROX_ORACLE, bench=True)
 def q_group_percentiles_approx(spark, sf_dir):
     """The 100 TB form of a14, CERTIFIED (not just documented):
     per-group t-digest quantiles via ``percentile_approx`` (mergeable
@@ -590,7 +590,7 @@ ORDER BY g_seg, g_nat, c_mktsegment, c_nationkey
 """
 
 
-@register("a18_cube_grouping", oracle=_A18_ORACLE)
+@register("a18_cube_grouping", oracle=_A18_ORACLE, bench=True)
 def q_cube_grouping(spark, sf_dir):
     """A18: full CUBE over (segment, nation) with explicit per-column
     GROUPING flags — the all-margins companion to a5's rollup /
@@ -676,7 +676,7 @@ FROM g ORDER BY 1, 2
 """
 
 
-@register("a19_share_of_total", oracle=_A19_ORACLE)
+@register("a19_share_of_total", oracle=_A19_ORACLE, bench=True)
 def q_share_of_total(spark, sf_dir):
     """Revenue share of each order status within its priority, and of
     the grand total (exact-cents rollup, two window sums over the
@@ -767,7 +767,7 @@ FROM cum GROUP BY 1 ORDER BY 1
 """
 
 
-@register("a20_weighted_quantiles", oracle=_A20_ORACLE)
+@register("a20_weighted_quantiles", oracle=_A20_ORACLE, bench=True)
 def q_weighted_quantiles(spark, sf_dir):
     """Quantity-weighted price quantiles per returnflag: exact integer
     cents, lower-quantile definition, zero float comparisons."""

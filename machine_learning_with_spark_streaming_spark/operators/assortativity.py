@@ -100,7 +100,7 @@ FROM stats
 """
 
 
-@register("graph_assortativity", oracle=_ASSORT_ORACLE)
+@register("graph_assortativity", oracle=_ASSORT_ORACLE, bench=True)
 def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph beyond-ref: Newman degree assortativity of the
     co-purchase graph from decimal integer sufficient statistics."""

@@ -72,7 +72,7 @@ ORDER BY 1
 """
 
 
-@register("u4_bag_set_ops", oracle=_BAG_ORACLE)
+@register("u4_bag_set_ops", oracle=_BAG_ORACLE, bench=True)
 def q_bag_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset reconciliation of two overlapping lineitem slices
     (returned rows vs finalized rows, keyed by order): EXCEPT ALL both

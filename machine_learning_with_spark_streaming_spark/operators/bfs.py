@@ -123,7 +123,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("graph_bfs_distance", oracle=_BFS_ORACLE)
+@register("graph_bfs_distance", oracle=_BFS_ORACLE, bench=True)
 def q_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph beyond-ref: 3-hop multi-source BFS distance histogram over
     the co-purchase graph from the partkey % 97 == 0 seed set."""

@@ -120,7 +120,7 @@ ORDER BY 1, 2
 """
 
 
-@register("j17_bloom_prejoin", oracle=_BLOOM_ORACLE)
+@register("j17_bloom_prejoin", oracle=_BLOOM_ORACLE, bench=True)
 def q_bloom_prejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Urgent-order revenue by month through the bloom-pruned join:
     lineitem rows are pre-filtered by the urgent orders' packed key
@@ -224,7 +224,7 @@ ORDER BY 1
 """
 
 
-@register("dedup_incremental_bloom", oracle=_INCR_BLOOM_ORACLE)
+@register("dedup_incremental_bloom", oracle=_INCR_BLOOM_ORACLE, bench=True)
 def q_incremental_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup_incremental fixture (25 near + 25 exact copies) through
     the bloom negative cache — identical survivors, and only the

@@ -447,7 +447,7 @@ FROM b ORDER BY asset_id
 """
 
 
-@register("mm_resize_bmp", oracle=_RESIZE_ORACLE)
+@register("mm_resize_bmp", oracle=_RESIZE_ORACLE, bench=True)
 def q_resize_bmp(spark, sf_dir):
     """Real decode -> nearest-neighbor resize over image assets; the
     position-weighted checksum proves every resized pixel came from the
@@ -527,7 +527,7 @@ FROM frames ORDER BY asset_id, frame_idx
 """
 
 
-@register("mm_wav_frame_rms", oracle=_WAV_RMS_ORACLE)
+@register("mm_wav_frame_rms", oracle=_WAV_RMS_ORACLE, bench=True)
 def q_wav_frame_rms(spark, sf_dir):
     """Frame-level RMS/peak/silence over real-decoded PCM samples (1->4
     expansion per audio asset); the oracle replays the energy math from
@@ -589,7 +589,7 @@ ORDER BY keeper_id
 """
 
 
-@register("mm_image_dedup", oracle=_IMAGE_DEDUP_ORACLE)
+@register("mm_image_dedup", oracle=_IMAGE_DEDUP_ORACLE, bench=True)
 def q_image_dedup(spark, sf_dir):
     """Duplicate-image groups by thumbnail hash over the image assets
     plus 10 injected re-uploads (asset_id + 500000): every injected copy
@@ -836,7 +836,7 @@ ORDER BY 1, 2
 """
 
 
-@register("mm_image_near_dup", oracle=_IMAGE_NEAR_DUP_ORACLE)
+@register("mm_image_near_dup", oracle=_IMAGE_NEAR_DUP_ORACLE, bench=True)
 def q_image_near_dup(spark, sf_dir):
     """Perceptual image near-dup over the image assets plus injected
     one-pixel edits (asset_id + 500000, first payload byte replaced by
@@ -926,7 +926,7 @@ ORDER BY 1, 2
 """
 
 
-@register("mm_audio_near_dup", oracle=_AUDIO_NEAR_DUP_ORACLE)
+@register("mm_audio_near_dup", oracle=_AUDIO_NEAR_DUP_ORACLE, bench=True)
 def q_audio_near_dup(spark, sf_dir):
     """Acoustic near-dup over the audio assets plus injected one-sample
     edits (asset_id + 600000, first byte -> 0x7E): each edit flips at

@@ -126,7 +126,7 @@ ORDER BY pmi_e6 DESC, w1, w2
 """
 
 
-@register("text_pmi_collocations", oracle=_PMI_ORACLE)
+@register("text_pmi_collocations", oracle=_PMI_ORACLE, bench=True)
 def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 PMI collocations (min pair count 20) over the documents
     corpus — integer-exact phrase mining."""

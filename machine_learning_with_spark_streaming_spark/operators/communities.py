@@ -122,7 +122,7 @@ ORDER BY 2 DESC, 1"""
     )
 
 
-@register("graph_label_propagation", oracle=_lpa_oracle())
+@register("graph_label_propagation", oracle=_lpa_oracle(), bench=True)
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Communities of size ≥5 after 4 synchronized min-tie LPA rounds
     over the repeat-co-purchase part graph."""

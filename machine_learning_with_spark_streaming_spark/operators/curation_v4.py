@@ -116,7 +116,7 @@ ORDER BY 1
 """
 
 
-@register("pipeline_curation_v4", oracle=_V4_ORACLE)
+@register("pipeline_curation_v4", oracle=_V4_ORACLE, bench=True)
 def q_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed v4 curation funnel: readability gate → fingerprint
     canonical dedup → per-stage (n_docs, word_mass) manifest."""

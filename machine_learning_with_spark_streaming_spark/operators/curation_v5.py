@@ -149,7 +149,7 @@ ORDER BY 1
 """
 
 
-@register("pipeline_curation_v5", oracle=_V5_ORACLE)
+@register("pipeline_curation_v5", oracle=_V5_ORACLE, bench=True)
 def q_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed v5 funnel: prefix-filtered lossless near-dedup +
     per-stage KMV vocabulary monitor."""

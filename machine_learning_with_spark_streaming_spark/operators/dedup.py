@@ -972,7 +972,7 @@ ORDER BY 1, 2
 """
 
 
-@register("dedup_source_overlap", oracle=_OVERLAP_ORACLE)
+@register("dedup_source_overlap", oracle=_OVERLAP_ORACLE, bench=True)
 def q_source_overlap(spark, sf_dir):
     """Pairwise shingle-Jaccard between the 20 document sources, with
     the production stop-shingle cut enabled (shingles in >10 of the 20
@@ -1183,7 +1183,7 @@ ORDER BY 1, 2
 """
 
 
-@register("dedup_incremental_minhash", oracle=_INCR_MINHASH_ORACLE)
+@register("dedup_incremental_minhash", oracle=_INCR_MINHASH_ORACLE, bench=True)
 def q_incremental_minhash(spark, sf_dir):
     """Daily-ingest *near*-dup pass: the same injected batch as
     ``dedup_incremental`` (25 near copies + 25 exact copies) probed
@@ -1350,7 +1350,7 @@ FROM agree ORDER BY 1, 2
 """
 
 
-@register("dedup_minhash_calibration", oracle=_cal_oracle())
+@register("dedup_minhash_calibration", oracle=_cal_oracle(), bench=True)
 def q_minhash_calibration(spark, sf_dir):
     """MinHash estimate-vs-exact calibration over the verified near-dup
     pairs of the injected-duplicate corpus (md5 hash family, k=16)."""

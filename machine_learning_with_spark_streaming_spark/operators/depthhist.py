@@ -89,7 +89,7 @@ FROM binned GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@register("a23_equi_depth_histogram", oracle=_A23_ORACLE)
+@register("a23_equi_depth_histogram", oracle=_A23_ORACLE, bench=True)
 def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-family beyond-ref: 4 frequency-balanced price bins per return
     flag — value-collapsed rank arithmetic, integer cents end to end."""

@@ -109,7 +109,7 @@ s{r} AS (
     )
 
 
-@register("sample_diverse_seeds", oracle=_diverse_oracle())
+@register("sample_diverse_seeds", oracle=_diverse_oracle(), bench=True)
 def q_diverse_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampling beyond-ref: 4 farthest-first diversity seeds over the
     embedding corpus (argmin of max-cosine-to-chosen per round,

@@ -99,7 +99,7 @@ ORDER BY 1
 """
 
 
-@register("j18_dpp_partition_join", oracle=_DPP_ORACLE)
+@register("j18_dpp_partition_join", oracle=_DPP_ORACLE, bench=True)
 def q_dpp_partition_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quarter revenue by ship month through the month-partitioned fact
     store: the quarter filter lives on the dim side only, and Catalyst's

@@ -83,7 +83,7 @@ ORDER BY 1, 2, 3
 """
 
 
-@register("dedup_blocked_editdist", oracle=_ER_ORACLE)
+@register("dedup_blocked_editdist", oracle=_ER_ORACLE, bench=True)
 def q_blocked_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-family beyond-ref: blocked entity resolution over part
     names — block on the head noun (last token), verify with exact

@@ -111,7 +111,7 @@ ORDER BY fisher DESC NULLS LAST, dim LIMIT {FISHER_TOP_K}
 """
 
 
-@register("emb_fisher_scores", oracle=_FISHER_ORACLE)
+@register("emb_fisher_scores", oracle=_FISHER_ORACLE, bench=True)
 def q_fisher_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Emb beyond-ref: the 8 most class-discriminative embedding
     dimensions by Fisher ratio — integer sufficient statistics, one

@@ -233,7 +233,7 @@ FROM picked ORDER BY event_type
 """
 
 
-@register("w15_alpha_grid_forecast", oracle=_grid_oracle())
+@register("w15_alpha_grid_forecast", oracle=_grid_oracle(), bench=True)
 def q_alpha_grid_forecast(spark, sf_dir):
     """Per-event-type best Brown smoothing alpha from the
     {0.3, 0.5, 0.7} grid by one-step-backtest MAE (integer micro-unit

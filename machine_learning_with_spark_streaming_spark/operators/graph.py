@@ -184,7 +184,7 @@ ORDER BY 1
 """
 
 
-@register("dedup_connected_components", oracle=_CC_ORACLE)
+@register("dedup_connected_components", oracle=_CC_ORACLE, bench=True)
 def q_connected_components(spark, sf_dir):
     """Full dedup-clustering pipeline: MinHash/LSH verified pairs →
     connected components → (doc, component, cluster_size) for every doc
@@ -278,7 +278,7 @@ ORDER BY 1
 """
 
 
-@register("dedup_canonical_keeper", oracle=_CANONICAL_KEEPER_ORACLE)
+@register("dedup_canonical_keeper", oracle=_CANONICAL_KEEPER_ORACLE, bench=True)
 def q_canonical_keeper(spark, sf_dir):
     """Cluster → keeper decision table over the duplicate-injected
     corpus, longest-member policy: the ' zzz extra' near-copies are 10
@@ -322,7 +322,7 @@ FROM csizes GROUP BY cluster_size ORDER BY 1
 """
 
 
-@register("dedup_cluster_stats", oracle=_CLUSTER_STATS_ORACLE)
+@register("dedup_cluster_stats", oracle=_CLUSTER_STATS_ORACLE, bench=True)
 def q_cluster_stats(spark, sf_dir):
     """The dedup DATASHEET: cluster-size histogram over the full
     LSH→verify→connected-components pipeline — n_clusters and doc mass
@@ -525,7 +525,7 @@ FROM tri
 """
 
 
-@register("graph_triangle_count", oracle=_TRIANGLE_ORACLE)
+@register("graph_triangle_count", oracle=_TRIANGLE_ORACLE, bench=True)
 def q_triangle_count(spark, sf_dir):
     """Triangle count of the part co-purchase graph (degree-ordered
     orientation — each triangle counted exactly once)."""
@@ -662,7 +662,7 @@ FROM {prev} ORDER BY 1
 """
 
 
-@register("graph_pagerank", oracle=_pagerank_oracle())
+@register("graph_pagerank", oracle=_pagerank_oracle(), bench=True)
 def q_pagerank(spark, sf_dir):
     """3-iteration integer PageRank of the part co-purchase graph
     (bit-exact iterative computation — every iterate is BIGINT)."""
@@ -691,7 +691,7 @@ def pagerank_integer_checkpointed(
     )
 
 
-@register("graph_pagerank_k10", oracle=_pagerank_oracle(PAGERANK_K10_ITERS))
+@register("graph_pagerank_k10", oracle=_pagerank_oracle(PAGERANK_K10_ITERS), bench=True)
 def q_pagerank_k10(spark, sf_dir):
     """10-iteration checkpointed integer PageRank of the co-purchase
     graph: per-round localCheckpoint keeps plan depth O(1) in k while

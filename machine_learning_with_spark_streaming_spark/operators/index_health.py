@@ -174,7 +174,7 @@ ORDER BY 1
 """
 
 
-@register("sim_ivf_cell_stats", oracle=_CELL_STATS_ORACLE)
+@register("sim_ivf_cell_stats", oracle=_CELL_STATS_ORACLE, bench=True)
 def q_ivf_cell_stats(spark, sf_dir):
     """Frozen-quantizer occupancy report (16 cells, empty cells
     included): the batch health check behind the IVF ANN family."""

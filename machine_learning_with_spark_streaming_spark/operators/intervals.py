@@ -96,7 +96,7 @@ FROM cov GROUP BY 1 ORDER BY 1
 """
 
 
-@register("w29_interval_coverage", oracle=_W29_ORACLE)
+@register("w29_interval_coverage", oracle=_W29_ORACLE, bench=True)
 def q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-family beyond-ref: distribution of per-customer covered days
     under merged 7-day post-order windows (interval-union islands)."""

@@ -537,7 +537,7 @@ def ensure_cell_store(
     return path
 
 
-@register("sim_topk_ivf_stored", oracle=_IVF_ORACLE)
+@register("sim_topk_ivf_stored", oracle=_IVF_ORACLE, bench=True)
 def q_ivf_topk_stored(spark, sf_dir):
     """The IVF serving path as a 100 TB deployment actually runs it:
     the corpus is pre-assigned at WRITE time and stored partitioned by
@@ -626,7 +626,7 @@ ORDER BY 1
 """
 
 
-@register("sim_ann_recall", oracle=_recall_oracle())
+@register("sim_ann_recall", oracle=_recall_oracle(), bench=True)
 def q_ann_recall(spark, sf_dir):
     """Recall@5 of IVF (nprobe=2/16) vs exact cosine for the 8 probe
     queries; both arms reuse their certified operator plans."""
@@ -812,7 +812,7 @@ def _semdedup_k32_oracle() -> str:
     return _semdedup_oracle(_centroid_values(KMEANS32_CENTROIDS))
 
 
-@register("dedup_semantic_k32", oracle=_semdedup_k32_oracle())
+@register("dedup_semantic_k32", oracle=_semdedup_k32_oracle(), bench=True)
 def q_semdedup_k32(spark, sf_dir):
     """SemDeDup in its k ∝ corpus scale form: the frozen 32-centroid
     quantizer (tools/freeze_kmeans32.py, mirrored as oracle literals)

@@ -65,7 +65,7 @@ FROM prod
 """
 
 
-@register("diag_join_cardinality", oracle=_DIAG_JOIN_ORACLE)
+@register("diag_join_cardinality", oracle=_DIAG_JOIN_ORACLE, bench=True)
 def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diag beyond-ref: exact size of the lineitem x returned-lineitem
     self-join per part key, computed from count tables only — the

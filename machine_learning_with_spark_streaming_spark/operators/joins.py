@@ -450,7 +450,7 @@ ORDER BY 1
 """
 
 
-@register("j10_asof_join", oracle=_J10_ORACLE)
+@register("j10_asof_join", oracle=_J10_ORACLE, bench=True)
 def q_asof_join(spark, sf_dir):
     """J10: self as-of join — each order matched to the same customer's
     most recent strictly-earlier order (DuckDB ASOF LEFT JOIN oracle).
@@ -646,7 +646,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("j14_inlist_pushdown_join", oracle=_J14_ORACLE)
+@register("j14_inlist_pushdown_join", oracle=_J14_ORACLE, bench=True)
 def q_inlist_pushdown_join(spark, sf_dir):
     """Bounded-dim semi-join via literal In() pushed into the fact
     scan (scan-level row-group skipping); oracle is the plain IN
@@ -835,7 +835,7 @@ FROM matched ORDER BY 1
 """
 
 
-@register("j16_asof_tolerance_join", oracle=_J16_ORACLE)
+@register("j16_asof_tolerance_join", oracle=_J16_ORACLE, bench=True)
 def q_asof_tolerance_join(spark, sf_dir):
     """J16: the j10 self as-of join under a 30-day staleness bound — the
     feature-store serving rule ("never attach a feature value older than

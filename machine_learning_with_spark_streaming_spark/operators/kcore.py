@@ -142,7 +142,7 @@ e{i} AS MATERIALIZED (
     )
 
 
-@register("graph_kcore_peel", oracle=_kcore_oracle())
+@register("graph_kcore_peel", oracle=_kcore_oracle(), bench=True)
 def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six synchronized 3-core peel rounds over the repeat-co-purchase
     part graph — the trace of surviving (nodes, edges) per round."""

@@ -91,7 +91,7 @@ ORDER BY fold
 """
 
 
-@register("sample_kfold_assign", oracle=_KFOLD_ORACLE)
+@register("sample_kfold_assign", oracle=_KFOLD_ORACLE, bench=True)
 def q_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Source-atomic 5-fold assignment over documents with the per-fold
     mass and train-complement report."""

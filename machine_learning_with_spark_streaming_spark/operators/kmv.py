@@ -252,7 +252,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register("a24_kmv_set_ops", oracle=_KMV_ORACLE)
+@register("a24_kmv_set_ops", oracle=_KMV_ORACLE, bench=True)
 def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise distinct-user union/intersection/Jaccard estimates for
     every event-type pair from k=64 KMV sketches — one corpus pass,
@@ -301,7 +301,7 @@ ORDER BY 1, 2
 """
 
 
-@register("a25_kmv_reaggregate", oracle=_KMV_ROLLUP_ORACLE)
+@register("a25_kmv_reaggregate", oracle=_KMV_ROLLUP_ORACLE, bench=True)
 def q_kmv_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly distinct users per event type from MERGED day-level KMV
     partials — a21_hll_reaggregate's rollup shape with an estimator

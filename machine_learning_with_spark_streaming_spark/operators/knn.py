@@ -113,7 +113,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@register("ml_knn_confusion", oracle=_KNN_ORACLE)
+@register("ml_knn_confusion", oracle=_KNN_ORACLE, bench=True)
 def q_knn_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ML beyond-ref: leave-one-out kNN (k=8) majority-vote confusion
     matrix for the first 64 embeddings against the full corpus —
@@ -216,7 +216,7 @@ FROM ok GROUP BY 1 ORDER BY 1
 """
 
 
-@register("ml_knn_calibration", oracle=_KNN_CALIB_ORACLE)
+@register("ml_knn_calibration", oracle=_KNN_CALIB_ORACLE, bench=True)
 def q_knn_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ML beyond-ref: kNN vote-count reliability curve (votes →
     accuracy ppm) for the first 64 embeddings — all-integer
@@ -306,7 +306,7 @@ FROM ranked WHERE rn = 1 ORDER BY query_id
 """
 
 
-@register("sample_hard_negatives", oracle=_HARDNEG_ORACLE)
+@register("sample_hard_negatives", oracle=_HARDNEG_ORACLE, bench=True)
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampling beyond-ref: hardest cross-label negative per probe
     (most similar different-label row) for the first 64 embeddings."""
@@ -425,7 +425,7 @@ ORDER BY 1
 """
 
 
-@register("sample_triplets", oracle=_TRIPLET_ORACLE)
+@register("sample_triplets", oracle=_TRIPLET_ORACLE, bench=True)
 def q_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampling beyond-ref: (anchor, nearest-positive, hardest-negative,
     integer margin) triplets for the first 64 embeddings — the

@@ -94,7 +94,7 @@ FROM unlinked ORDER BY cn DESC, a, b LIMIT {CN_TOP_K}
 """
 
 
-@register("graph_link_prediction", oracle=_LINKPRED_ORACLE)
+@register("graph_link_prediction", oracle=_LINKPRED_ORACLE, bench=True)
 def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph beyond-ref: top-20 unlinked part pairs by degree-capped
     common-neighbor count over the co-purchase graph."""

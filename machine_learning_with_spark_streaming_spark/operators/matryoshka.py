@@ -123,7 +123,7 @@ FROM full_arm f LEFT JOIN arm_{d} t
     )
 
 
-@register("sim_matryoshka_recall", oracle=_mrl_oracle())
+@register("sim_matryoshka_recall", oracle=_mrl_oracle(), bench=True)
 def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 vs full-dim exact retrieval at 32/16/8-dim truncations
     for the 8 probe queries — the dimension-vs-quality serving curve."""

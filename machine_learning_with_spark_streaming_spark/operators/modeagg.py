@@ -54,7 +54,7 @@ FROM ranked WHERE rn = 1 ORDER BY g
 """
 
 
-@register("a22_mode_per_group", oracle=_A22_ORACLE)
+@register("a22_mode_per_group", oracle=_A22_ORACLE, bench=True)
 def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-family beyond-ref: exact most-frequent quantity per return
     flag with the deterministic (count DESC, value ASC) tie rule."""

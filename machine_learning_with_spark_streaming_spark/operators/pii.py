@@ -126,7 +126,7 @@ FROM planted ORDER BY doc_id
 """
 
 
-@register("pii_redact", oracle=_pii_oracle())
+@register("pii_redact", oracle=_pii_oracle(), bench=True)
 def q_pii_redact(spark, sf_dir):
     """PII scrub over the corpus with deterministically planted PII:
     per-kind match counts + md5 of the redacted text (proves both
@@ -204,7 +204,7 @@ ORDER BY verdict, c_nationkey, c_mktsegment, bal_bucket
 """
 
 
-@register("v15_k_anonymity_gate", oracle=_K_ANON_ORACLE)
+@register("v15_k_anonymity_gate", oracle=_K_ANON_ORACLE, bench=True)
 def q_k_anonymity_gate(spark, sf_dir):
     """k=10 anonymity gate over customers keyed by (nation, market
     segment, $1000 balance bucket): released groups in full detail,

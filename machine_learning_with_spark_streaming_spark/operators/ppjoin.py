@@ -144,7 +144,7 @@ def prefix_filtered_jaccard_pairs(
     )
 
 
-@register("dedup_jaccard_prefix_filter", oracle=_JACCARD_ORACLE_BODY)
+@register("dedup_jaccard_prefix_filter", oracle=_JACCARD_ORACLE_BODY, bench=True)
 def q_prefix_filtered_pairs(spark, sf_dir):
     """The dedup_ngram_jaccard result through the lossless prefix-
     filtered candidate path — same oracle certifies that pruning

@@ -252,7 +252,7 @@ FROM scored ORDER BY adc_nano, vec_id LIMIT {PQ_TOP_K}
 """
 
 
-@register("sim_pq_codes", oracle=_PQ_CODES_ORACLE)
+@register("sim_pq_codes", oracle=_PQ_CODES_ORACLE, bench=True)
 def q_pq_codes(spark, sf_dir):
     """The full PQ code table — every (vector, subspace) argmin against
     the frozen codebook, certifying the encoder itself (not a summary:
@@ -269,7 +269,7 @@ def q_pq_codes(spark, sf_dir):
     )
 
 
-@register("sim_pq_adc_topk", oracle=_PQ_ADC_ORACLE)
+@register("sim_pq_adc_topk", oracle=_PQ_ADC_ORACLE, bench=True)
 def q_pq_adc_topk(spark, sf_dir):
     """PQ-ADC serving: top-10 approximate neighbors of vec_id 0 by
     summed integer-nano LUT distances — the 32×-compressed ANN path."""
@@ -434,7 +434,7 @@ ORDER BY query_id, rank
 """
 
 
-@register("sim_pq_adc_topk_many", oracle=_PQ_ADC_MANY_ORACLE)
+@register("sim_pq_adc_topk_many", oracle=_PQ_ADC_MANY_ORACLE, bench=True)
 def q_pq_adc_topk_many(spark, sf_dir):
     """Batched PQ-ADC serving: vec_ids 0..3 as one request batch, each
     answered top-10 from the shared code table — the per-micro-batch
@@ -526,7 +526,7 @@ FROM scored ORDER BY adc_nano, vec_id LIMIT {PQ_TOP_K}
 """
 
 
-@register("sim_ivfpq_topk", oracle=_IVFPQ_ORACLE)
+@register("sim_ivfpq_topk", oracle=_IVFPQ_ORACLE, bench=True)
 def q_ivfpq_topk(spark, sf_dir):
     """The full IVF-PQ serving composition under the driver's hash
     gate: probe the query's {nprobe} frozen-IVF cells, prune candidates

@@ -107,7 +107,7 @@ FROM g ORDER BY 1, 2
 """
 
 
-@register("text_readability", oracle=_READABILITY_ORACLE)
+@register("text_readability", oracle=_READABILITY_ORACLE, bench=True)
 def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text beyond-ref: Flesch reading-ease report per (lang, source)
     from exact integer word/sentence/vowel-group totals."""

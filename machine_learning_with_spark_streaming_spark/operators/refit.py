@@ -195,7 +195,7 @@ ORDER BY 1
 """
 
 
-@register("sim_ivf_refit_step", oracle=_REFIT_ORACLE)
+@register("sim_ivf_refit_step", oracle=_REFIT_ORACLE, bench=True)
 def q_ivf_refit_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd refit step of the frozen 16-cell quantizer over the
     embeddings corpus with the before/after occupancy + mean-cosine

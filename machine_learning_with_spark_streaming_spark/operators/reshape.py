@@ -392,7 +392,7 @@ ORDER BY 1, 2
 """
 
 
-@register("r6_linear_interpolate", oracle=_INTERP_ORACLE)
+@register("r6_linear_interpolate", oracle=_INTERP_ORACLE, bench=True)
 def q_gap_fill_interpolate(spark, sf_dir):
     """Daily per-user series with gaps LINEARLY interpolated in exact
     integer cents — the moving-quantity companion to r5's
@@ -474,7 +474,7 @@ FROM marked GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@register("r7_ohlc_resample", oracle=_OHLC_ORACLE)
+@register("r7_ohlc_resample", oracle=_OHLC_ORACLE, bench=True)
 def q_ohlc_resample(spark, sf_dir):
     """R7: hourly OHLC bars per event type over the events table —
     open/high/low/close plus count and 6-dp sum, ties broken on

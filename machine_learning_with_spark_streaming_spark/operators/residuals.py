@@ -93,7 +93,7 @@ ORDER BY residual2_nano DESC, vec_id LIMIT {RESIDUAL_TOP_K}
 """
 
 
-@register("emb_pca_residual_topk", oracle=_residual_oracle())
+@register("emb_pca_residual_topk", oracle=_residual_oracle(), bench=True)
 def q_pca_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Emb beyond-ref: the 12 embeddings with the most energy OUTSIDE
     the frozen top-4 principal axes — the off-manifold triage queue,

@@ -118,7 +118,7 @@ ORDER BY 1
 """
 
 
-@register("w20_theilsen_trend", oracle=_THEILSEN_ORACLE)
+@register("w20_theilsen_trend", oracle=_THEILSEN_ORACLE, bench=True)
 def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust monthly-revenue trend per supplier nation: Theil–Sen
     lower-median slope in 1e-6 cents/month over the full shipdate
@@ -269,7 +269,7 @@ ORDER BY 1
 """
 
 
-@register("w21_mann_kendall", oracle=_MK_ORACLE)
+@register("w21_mann_kendall", oracle=_MK_ORACLE, bench=True)
 def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann–Kendall monotone-trend verdict per supplier nation over the
     monthly revenue series (5% two-sided, tie-corrected, continuity-

@@ -130,7 +130,7 @@ FROM daily ORDER BY 1, 2
 """
 
 
-@register("w23_rolling_median", oracle=_W23_ORACLE)
+@register("w23_rolling_median", oracle=_W23_ORACLE, bench=True)
 def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-family beyond-ref: trailing 7-day rolling MEDIAN of daily
     event revenue per event type — doubled order-statistic form, fully
@@ -180,7 +180,7 @@ FROM stats ORDER BY 1, 2
 """
 
 
-@register("w24_acf_lags", oracle=_W24_ORACLE)
+@register("w24_acf_lags", oracle=_W24_ORACLE, bench=True)
 def q_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-family beyond-ref: lag-1/2/7 autocorrelation of daily revenue
     per event type — the seasonality-memory diagnostic, integer
@@ -243,7 +243,7 @@ FROM dev ORDER BY 1, 2
 """
 
 
-@register("w26_rolling_mad", oracle=_W26_ORACLE)
+@register("w26_rolling_mad", oracle=_W26_ORACLE, bench=True)
 def q_rolling_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-family beyond-ref: trailing 7-day rolling MAD (quadrupled
     integer order-statistic form) of daily event revenue per type —
@@ -326,7 +326,7 @@ ORDER BY 1, 2
 """
 
 
-@register("w27_robust_stl", oracle=_W27_ORACLE)
+@register("w27_robust_stl", oracle=_W27_ORACLE, bench=True)
 def q_robust_stl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-family beyond-ref: robust STL-lite (median trend, median
     weekday seasonal, exact integer remainder; 4·cents = 2·med_x2 +
@@ -388,7 +388,7 @@ GROUP BY 1, 2 ORDER BY 1
 """
 
 
-@register("w28_max_drawdown", oracle=_W28_ORACLE)
+@register("w28_max_drawdown", oracle=_W28_ORACLE, bench=True)
 def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-family beyond-ref: max drawdown (deepest running-peak gap) of
     cumulative daily revenue per event type, with the first trough day

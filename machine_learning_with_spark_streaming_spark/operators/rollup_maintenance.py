@@ -112,7 +112,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("a16_incremental_rollup", oracle=_A16_ORACLE)
+@register("a16_incremental_rollup", oracle=_A16_ORACLE, bench=True)
 def q_incremental_rollup(spark, sf_dir):
     """Continuous-aggregate maintenance: the rollup built from ~80% of
     orders, merged with the remaining ~20% as a delta batch, must equal

@@ -327,7 +327,7 @@ ORDER BY 1, 2
 """
 
 
-@register("pack_token_budget_exact", oracle=_PACK_EXACT_ORACLE)
+@register("pack_token_budget_exact", oracle=_PACK_EXACT_ORACLE, bench=True)
 def q_pack_token_budget_exact(spark, sf_dir):
     """Exact greedy 512-token packing per source stream (Arrow-batched
     sequential walk), chunk occupancy output; the oracle replays the
@@ -415,7 +415,7 @@ ORDER BY 1
 """
 
 
-@register("sample_shard_assignment", oracle=_SHARD_ORACLE)
+@register("sample_shard_assignment", oracle=_SHARD_ORACLE, bench=True)
 def q_shard_assignment(spark, sf_dir):
     """Deterministic 16-way shard assignment over documents; certify
     per-shard membership (count, char mass, key range) against the
@@ -686,7 +686,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("pipeline_training_mix", oracle=_TRAIN_MIX_ORACLE)
+@register("pipeline_training_mix", oracle=_TRAIN_MIX_ORACLE, bench=True)
 def q_training_mix(spark, sf_dir):
     """Composed mix materialization over documents; certify per-shard
     doc/lang/char masses against the oracle replaying every md5 gate."""
@@ -783,7 +783,7 @@ ORDER BY 1
 """
 
 
-@register("sample_range_layout", oracle=_range_layout_oracle())
+@register("sample_range_layout", oracle=_range_layout_oracle(), bench=True)
 def q_range_layout(spark, sf_dir):
     """Deterministic equal-frequency range layout of orders by price:
     per-shard (count, min, max) certify both the boundary computation
@@ -1075,7 +1075,7 @@ ORDER BY anchor_id, rank
 """
 
 
-@register("sample_negatives", oracle=_NEGATIVES_ORACLE)
+@register("sample_negatives", oracle=_NEGATIVES_ORACLE, bench=True)
 def q_sample_negatives(spark, sf_dir):
     """4 deterministic different-label negatives per anchor (first 8
     vectors), via one bucket probe — the contrastive-pair generator
@@ -1245,7 +1245,7 @@ ORDER BY 1, 2
 """
 
 
-@register("sample_length_batches", oracle=_LENGTH_BATCH_ORACLE)
+@register("sample_length_batches", oracle=_LENGTH_BATCH_ORACLE, bench=True)
 def q_length_batches(spark, sf_dir):
     """Length-bucketed 32-doc batches over the corpus with per-batch
     padded-vs-actual token cost — the padding-efficiency layout report."""
@@ -1338,7 +1338,7 @@ ORDER BY epoch, shard, pos
 """
 
 
-@register("sample_epoch_shuffle", oracle=_EPOCH_SHUFFLE_ORACLE)
+@register("sample_epoch_shuffle", oracle=_EPOCH_SHUFFLE_ORACLE, bench=True)
 def q_epoch_shuffle(spark, sf_dir):
     """Two epochs of the deterministic training shuffle over documents:
     the full (epoch, doc, shard, pos) order table. Epoch 0 and epoch 1
@@ -1424,7 +1424,7 @@ FROM w GROUP BY 1 ORDER BY 1
 """
 
 
-@register("sample_poisson_bootstrap", oracle=_BOOT_ORACLE)
+@register("sample_poisson_bootstrap", oracle=_BOOT_ORACLE, bench=True)
 def q_poisson_bootstrap(spark, sf_dir):
     """Four bootstrap resamples of the corpus as per-replicate weight
     summaries (total weight, surviving rows, weighted char mass) —
@@ -1505,7 +1505,7 @@ SELECT * FROM summary ORDER BY split
 """
 
 
-@register("pipeline_eval_holdout", oracle=_HOLDOUT_ORACLE)
+@register("pipeline_eval_holdout", oracle=_HOLDOUT_ORACLE, bench=True)
 def q_eval_holdout(spark, sf_dir):
     """The training-data RELEASE capstone: every ~97th document plays
     the held-out eval set; corpus docs sharing any 3-gram with it are
@@ -1638,7 +1638,7 @@ ORDER BY 1, 3
 """
 
 
-@register("sample_balanced_classes", oracle=_BALANCED_ORACLE)
+@register("sample_balanced_classes", oracle=_BALANCED_ORACLE, bench=True)
 def q_balanced_downsample(spark, sf_dir):
     """Exact per-label downsample of the embeddings corpus to the
     minority class count (md5-ranked, byte-identical cross-engine)."""

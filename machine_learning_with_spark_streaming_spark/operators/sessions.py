@@ -345,7 +345,7 @@ FROM ranked
 """
 
 
-@register("s26_funnel_latency", oracle=_S26_ORACLE)
+@register("s26_funnel_latency", oracle=_S26_ORACLE, bench=True)
 def q_funnel_latency(spark, sf_dir):
     """S-family beyond-ref: first-view -> first-purchase conversion
     delay summary (exact-µs rank statistics)."""

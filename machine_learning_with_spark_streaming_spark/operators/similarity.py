@@ -382,7 +382,7 @@ ORDER BY vec_id
 """
 
 
-@register("sim_quantize_int8", oracle=_QUANT_ORACLE)
+@register("sim_quantize_int8", oracle=_QUANT_ORACLE, bench=True)
 def q_quantize_int8(spark, sf_dir):
     """Int8-quantize every corpus embedding; certify scale + four
     position/value-sensitive integer checksums of the code vectors.
@@ -769,7 +769,7 @@ FROM top ORDER BY rank
 """
 
 
-@register("pipeline_rag_index", oracle=_RAG_INDEX_ORACLE)
+@register("pipeline_rag_index", oracle=_RAG_INDEX_ORACLE, bench=True)
 def q_rag_index(spark, sf_dir):
     """Text->chunk->hashed-embedding->cosine-top-k — the INDEXING bookend
     to sim_rag_retrieve's serving path; every arithmetic step is integer
@@ -849,7 +849,7 @@ FROM j GROUP BY grp ORDER BY grp
 """
 
 
-@register("emb_centroid_drift", oracle=_DRIFT_ORACLE)
+@register("emb_centroid_drift", oracle=_DRIFT_ORACLE, bench=True)
 def q_centroid_drift(spark, sf_dir):
     """Drift between the even-id and odd-id halves of the embeddings
     table treated as two snapshots: same-distribution halves must show
@@ -950,7 +950,7 @@ ORDER BY query_id, rank
 """
 
 
-@register("sim_topk_multiprobe", oracle=_TOPK_MULTIPROBE_ORACLE)
+@register("sim_topk_multiprobe", oracle=_TOPK_MULTIPROBE_ORACLE, bench=True)
 def q_topk_multiprobe(spark, sf_dir):
     """Multi-probe sign-LSH ANN top-5: each query probes its bucket and
     all 4 Hamming-1 neighbors. The oracle enumerates the same probe set
@@ -1361,7 +1361,7 @@ FROM v ORDER BY 1
 """
 
 
-@register("emb_truncate_renorm", oracle=_MRL_ORACLE)
+@register("emb_truncate_renorm", oracle=_MRL_ORACLE, bench=True)
 def q_truncate_renorm(spark, sf_dir):
     """Matryoshka 64->16 truncate + renormalize over the embeddings
     table: prefix norm, retained-energy ratio, renormalized checksum."""
@@ -1472,7 +1472,7 @@ ORDER BY query_id, rank
 """
 
 
-@register("sim_binary_hamming_topk", oracle=_BINARY_ORACLE)
+@register("sim_binary_hamming_topk", oracle=_BINARY_ORACLE, bench=True)
 def q_binary_hamming_topk(spark, sf_dir):
     """Hamming top-10 for the first 4 vectors over sign-binarized
     embeddings — the 1-bit end of the quantization ladder, certified
@@ -1542,7 +1542,7 @@ FROM agg ORDER BY 1
 """
 
 
-@register("emb_dim_stats", oracle=_DIM_STATS_ORACLE)
+@register("emb_dim_stats", oracle=_DIM_STATS_ORACLE, bench=True)
 def q_embedding_dim_stats(spark, sf_dir):
     """Per-dimension mean/std profile of the embeddings table (exact
     integer-nano sufficient statistics, 64 output rows)."""
@@ -1616,7 +1616,7 @@ FROM w ORDER BY 1
 """
 
 
-@register("emb_whiten_frozen", oracle=_whiten_oracle())
+@register("emb_whiten_frozen", oracle=_whiten_oracle(), bench=True)
 def q_whiten_frozen(spark, sf_dir):
     """Whitened-embedding summary per vector against the frozen
     training-time statistics (map-only; fold-certified sums)."""

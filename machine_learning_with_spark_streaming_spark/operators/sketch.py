@@ -110,7 +110,7 @@ ORDER BY exact_count DESC, t.token
 """
 
 
-@register("text_cms_heavy_hitters", oracle=_CMS_ORACLE)
+@register("text_cms_heavy_hitters", oracle=_CMS_ORACLE, bench=True)
 def q_cms_heavy_hitters(spark, sf_dir):
     """Corpus heavy-hitters through the count-min grid: top-20 exact
     tokens probed against the 4×64 sketch; ``overestimate >= 0`` is the

@@ -75,7 +75,7 @@ ORDER BY 1, 2
 """
 
 
-@register("a21_hll_reaggregate", oracle=_HLL_ORACLE)
+@register("a21_hll_reaggregate", oracle=_HLL_ORACLE, bench=True)
 def q_hll_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly distinct users per event type from MERGED day-level HLL
     partials, bound-certified against the exact recount (violation flag

@@ -92,7 +92,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("j12_salted_skew_join", oracle=_J12_ORACLE)
+@register("j12_salted_skew_join", oracle=_J12_ORACLE, bench=True)
 def q_salted_skew_join(spark, sf_dir):
     """Skew-hardened fact-dimension equi-join: lineitem's rows scatter
     over 8 salted tasks per part key, the part side is replicated per
@@ -128,7 +128,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@register("a15_salted_two_phase_agg", oracle=_A15_ORACLE)
+@register("a15_salted_two_phase_agg", oracle=_A15_ORACLE, bench=True)
 def q_salted_two_phase_agg(spark, sf_dir):
     """Two-phase salted groupBy on a low-cardinality (so inherently hot)
     key pair; partials on (key, salt) then finals on key must equal the

@@ -66,7 +66,7 @@ LIMIT 10
 """
 
 
-@register("sql_q3_shipping_priority", oracle=_Q3_ORACLE)
+@register("sql_q3_shipping_priority", oracle=_Q3_ORACLE, bench=True)
 def q_sql_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-surface: the TPC-H Q3 shape as pure ``spark.sql`` text over
     registered views — segment-filtered 3-table join, e4 fixed-point
@@ -114,7 +114,7 @@ FROM events GROUP BY 1 ORDER BY 1
 """
 
 
-@register("f13_variant_props", oracle=_VARIANT_ORACLE)
+@register("f13_variant_props", oracle=_VARIANT_ORACLE, bench=True)
 def q_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F-family: semi-structured payload access through the Spark 4
     VARIANT type — parse_json once, typed variant_get extraction —
@@ -158,7 +158,7 @@ ORDER BY o_orderstatus NULLS LAST, o_orderpriority NULLS LAST
 """
 
 
-@register("sql_rollup_grand_total", oracle=_SQL_ROLLUP)
+@register("sql_rollup_grand_total", oracle=_SQL_ROLLUP, bench=True)
 def q_sql_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-surface A5: rollup + GROUPING() grand-total flag as pure
     ``spark.sql`` text (DAX ROLLUPADDISSUBTOTAL/ISGRANDTOTALROWTOTAL,
@@ -198,7 +198,7 @@ ORDER BY priority
 """
 
 
-@register("sql_qc_verdict", oracle=_SQL_QC)
+@register("sql_qc_verdict", oracle=_SQL_QC, bench=True)
 def q_sql_qc_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-surface V3: the +/-15% QC verdict with the reference's
     0-baseline edge rules (pipeline/qualitycheck.py:175-180) as pure
@@ -241,7 +241,7 @@ ORDER BY brand, partkey
 """
 
 
-@register("sql_abc_classify", oracle=_SQL_ABC)
+@register("sql_abc_classify", oracle=_SQL_ABC, bench=True)
 def q_sql_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-surface W1: ABC Pareto classification as pure SQL text
     (packages/myConversionsClass.py:228-252) — DECIMAL cumulations so

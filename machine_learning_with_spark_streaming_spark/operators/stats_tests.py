@@ -104,7 +104,7 @@ ORDER BY 1, 2
 """
 
 
-@register("v25_chi2_independence", oracle=_V25_ORACLE)
+@register("v25_chi2_independence", oracle=_V25_ORACLE, bench=True)
 def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V-family beyond-ref: chi-square independence decomposition of
     l_returnflag x l_linestatus — per-cell terms from exact integer
@@ -203,7 +203,7 @@ FROM clamped GROUP BY g ORDER BY g
 """
 
 
-@register("w25_winsorized_mean", oracle=_W25_ORACLE)
+@register("w25_winsorized_mean", oracle=_W25_ORACLE, bench=True)
 def q_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-family beyond-ref: 10/90 rank-winsorized mean of order value
     per priority class — integer order-statistic bounds, integer
@@ -279,7 +279,7 @@ FROM per_key
 """
 
 
-@register("v26_monotonic_violations", oracle=_V26_ORACLE)
+@register("v26_monotonic_violations", oracle=_V26_ORACLE, bench=True)
 def q_monotonic_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V-family beyond-ref: does o_orderdate move backward along each
     customer's order-key sequence? The append-only sequence-sanity

@@ -78,7 +78,7 @@ FROM best GROUP BY best_len ORDER BY best_len
 """
 
 
-@register("w22_order_streaks", oracle=_W22_ORACLE)
+@register("w22_order_streaks", oracle=_W22_ORACLE, bench=True)
 def q_order_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-family beyond-ref: longest consecutive-order-day streak per
     customer (gaps-and-islands via row_number difference), reported as

@@ -624,7 +624,7 @@ ORDER BY 1
 """
 
 
-@register("text_repetition", oracle=_REPETITION_ORACLE)
+@register("text_repetition", oracle=_REPETITION_ORACLE, bench=True)
 def q_repetition(spark, sf_dir):
     """Repetition quality gate: dup-word / top-word / top-bigram shares +
     drop flag per document."""
@@ -772,7 +772,7 @@ ORDER BY 1
 """
 
 
-@register("pipeline_llm_data_prep_v2", oracle=_prep_v2_oracle())
+@register("pipeline_llm_data_prep_v2", oracle=_prep_v2_oracle(), bench=True)
 def q_llm_data_prep_v2(spark, sf_dir):
     """Composed v2 corpus prep over the duplicate-injected corpus, with
     derived per-source provenance (injected ids inherit the base doc's
@@ -853,7 +853,7 @@ ORDER BY 1
 """
 
 
-@register("text_unigram_logprob", oracle=_UNIGRAM_ORACLE)
+@register("text_unigram_logprob", oracle=_UNIGRAM_ORACLE, bench=True)
 def q_unigram_logprob(spark, sf_dir):
     """Unigram LM quality score per document (corpus-fit distribution)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -933,7 +933,7 @@ ORDER BY 1, 2
 """
 
 
-@register("text_chunk_windows", oracle=_CHUNK_ORACLE)
+@register("text_chunk_windows", oracle=_CHUNK_ORACLE, bench=True)
 def q_chunk_windows(spark, sf_dir):
     """64-token chunks with 16-token overlap per document; md5 of each
     chunk's text proves byte-identical windowing cross-engine."""
@@ -969,7 +969,7 @@ ORDER BY 1
 """
 
 
-@register("dedup_repeated_chunks", oracle=_REPEATED_CHUNKS_ORACLE)
+@register("dedup_repeated_chunks", oracle=_REPEATED_CHUNKS_ORACLE, bench=True)
 def q_repeated_chunks(spark, sf_dir):
     """Sub-document span dedup: full-size token windows repeated across
     documents (the scalable stand-in for suffix-array substring dedup —
@@ -1190,7 +1190,7 @@ ORDER BY 1, 2
 """
 
 
-@register("text_perplexity_buckets", oracle=_CCNET_ORACLE)
+@register("text_perplexity_buckets", oracle=_CCNET_ORACLE, bench=True)
 def q_perplexity_buckets(spark, sf_dir):
     """Per-language head/middle/tail LM-quality terciles (CCNet shape)
     over documents; certify per-bucket doc/word masses and mean score."""
@@ -1317,7 +1317,7 @@ FROM documents
 """
 
 
-@register("text_corpus_datasheet_approx", oracle=_DATASHEET_APPROX_ORACLE)
+@register("text_corpus_datasheet_approx", oracle=_DATASHEET_APPROX_ORACLE, bench=True)
 def q_corpus_datasheet_approx(spark, sf_dir):
     """The 100 TB datasheet, CERTIFIED (not just documented in
     corpus_datasheet's docstring): every exact-distinct becomes HLL++
@@ -1494,7 +1494,7 @@ ORDER BY 1
 """
 
 
-@register("text_dsir_weights", oracle=_DSIR_ORACLE)
+@register("text_dsir_weights", oracle=_DSIR_ORACLE, bench=True)
 def q_dsir_weights(spark, sf_dir):
     """DSIR importance weights with English as the target domain."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
@@ -1628,7 +1628,7 @@ ORDER BY 1
 """
 
 
-@register("dedup_segments_rewrite", oracle=_SEGMENT_DEDUP_ORACLE)
+@register("dedup_segments_rewrite", oracle=_SEGMENT_DEDUP_ORACLE, bench=True)
 def q_segment_dedup(spark, sf_dir):
     """Segment dedup over the injected-duplicate corpus: exact copies
     lose every segment, near-copies keep only the trailing suffix
@@ -1740,7 +1740,7 @@ ORDER BY 1
 """
 
 
-@register("text_quality_classifier", oracle=_textclf_oracle())
+@register("text_quality_classifier", oracle=_textclf_oracle(), bench=True)
 def q_hashed_quality_classifier(spark, sf_dir):
     """Frozen hashed-linear quality filter over documents; the verdict
     and the micro-unit score are both exact integers, hash-compared."""
@@ -1823,7 +1823,7 @@ LIMIT {BPE_TOP_PAIRS}
 """
 
 
-@register("text_bpe_pair_counts", oracle=_BPE_ORACLE)
+@register("text_bpe_pair_counts", oracle=_BPE_ORACLE, bench=True)
 def q_bpe_pair_counts(spark, sf_dir):
     """Top-{BPE_TOP_PAIRS} adjacent character pairs (first BPE merge
     iteration statistics) with deterministic (count desc, pair asc)
@@ -2095,7 +2095,7 @@ ORDER BY metric
 """
 
 
-@register("v11_incremental_datasheet", oracle=_INCR_DATASHEET_ORACLE)
+@register("v11_incremental_datasheet", oracle=_INCR_DATASHEET_ORACLE, bench=True)
 def q_incremental_datasheet(spark, sf_dir):
     """Incremental datasheet maintenance: the corpus split into two
     parts, each sketched independently, sketches merged, datasheet
@@ -2282,7 +2282,7 @@ ORDER BY bin
 """
 
 
-@register("v14_histogram_drift", oracle=_HIST_DRIFT_ORACLE)
+@register("v14_histogram_drift", oracle=_HIST_DRIFT_ORACLE, bench=True)
 def q_histogram_drift(spark, sf_dir):
     """Length-histogram drift between the even/odd document halves as
     two snapshots; the TOTAL (-1) row is the L1 distribution distance."""
@@ -2458,7 +2458,7 @@ ORDER BY 1
 """
 
 
-@register("dedup_segments_cdc", oracle=_CDC_SEGMENT_DEDUP_ORACLE)
+@register("dedup_segments_cdc", oracle=_CDC_SEGMENT_DEDUP_ORACLE, bench=True)
 def q_cdc_segment_dedup(spark, sf_dir):
     """CDC segment dedup over the injected-duplicate corpus: the
     ' zzz extra' suffix edit on the near-copies perturbs only the final
@@ -2518,7 +2518,7 @@ ORDER BY 1, 2
 """
 
 
-@register("pipeline_llm_data_prep_v3", oracle=_PREP_V3_ORACLE)
+@register("pipeline_llm_data_prep_v3", oracle=_PREP_V3_ORACLE, bench=True)
 def q_llm_data_prep_v3(spark, sf_dir):
     """Composed v3 corpus prep — the round-5 chain end to end:
     content-defined segment dedup REWRITES the duplicate-injected
@@ -2744,7 +2744,7 @@ FROM agg ORDER BY 1
 """
 
 
-@register("text_word_entropy", oracle=_ENTROPY_ORACLE)
+@register("text_word_entropy", oracle=_ENTROPY_ORACLE, bench=True)
 def q_word_entropy(spark, sf_dir):
     """Per-doc word-distribution entropy + distinct ratio over the
     corpus — low-entropy documents are the template/spam tail a
@@ -2771,7 +2771,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@register("text_langid_confusion", oracle=_CONFUSION_ORACLE)
+@register("text_langid_confusion", oracle=_CONFUSION_ORACLE, bench=True)
 def q_langid_confusion(spark, sf_dir):
     """Classifier EVAL over the certified lang-id: the (true, predicted)
     confusion matrix with per-cell corpus share — the quality report a
@@ -2887,7 +2887,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("text_shingle_novelty", oracle=_NOVELTY_ORACLE)
+@register("text_shingle_novelty", oracle=_NOVELTY_ORACLE, bench=True)
 def q_shingle_novelty(spark, sf_dir):
     """Per-document novel-shingle fraction over the documents corpus
     (first-occurrence by min doc_id)."""

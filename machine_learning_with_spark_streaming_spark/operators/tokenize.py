@@ -142,7 +142,7 @@ ORDER BY doc_id
 """
 
 
-@register("text_subword_tokenize", oracle=_TOKENIZE_ORACLE)
+@register("text_subword_tokenize", oracle=_TOKENIZE_ORACLE, bench=True)
 def q_subword_tokenize(spark, sf_dir):
     """Frozen-vocab greedy subword tokenization of every document; the
     md5 over the full token stream certifies token identity AND order,
@@ -204,7 +204,7 @@ FROM packed GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@register("pipeline_tokenize_pack", oracle=_TOKENIZE_PACK_ORACLE)
+@register("pipeline_tokenize_pack", oracle=_TOKENIZE_PACK_ORACLE, bench=True)
 def q_tokenize_pack(spark, sf_dir):
     """Tokenizer-exact sequence packing: count every document's tokens
     with the frozen-vocab tokenizer (not a whitespace proxy), then pack

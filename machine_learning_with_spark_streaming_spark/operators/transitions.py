@@ -79,7 +79,7 @@ ORDER BY 1, 2
 """
 
 
-@register("s24_event_transitions", oracle=_S24_ORACLE)
+@register("s24_event_transitions", oracle=_S24_ORACLE, bench=True)
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S-family beyond-ref: the user-timeline event-type transition
     matrix (counts + integer-ppm conditional probabilities)."""

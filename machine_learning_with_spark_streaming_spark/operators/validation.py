@@ -954,7 +954,7 @@ _PROFILE_APPROX_ORACLE = _PROFILE_ORACLE.replace(
 )
 
 
-@register("v10_column_profile_approx", oracle=_PROFILE_APPROX_ORACLE)
+@register("v10_column_profile_approx", oracle=_PROFILE_APPROX_ORACLE, bench=True)
 def q_column_profile_approx(spark, sf_dir):
     """HLL++-backed profile of the same four lineitem columns, with the
     2.5-sigma error bound as an in-row zero-violation contract."""
@@ -1077,7 +1077,7 @@ def _candidate_keys_oracle() -> str:
     )
 
 
-@register("v23_candidate_keys", oracle=_candidate_keys_oracle())
+@register("v23_candidate_keys", oracle=_candidate_keys_oracle(), bench=True)
 def q_candidate_keys(spark, sf_dir):
     """Key discovery over orders: the true key, two non-keys, and a
     composite, with the HLL 100 TB form bound-certified in-row."""
@@ -1168,7 +1168,7 @@ FROM (
     return "\nUNION ALL\n".join(sels) + "\nORDER BY 1"
 
 
-@register("v24_fd_report", oracle=_fd_oracle())
+@register("v24_fd_report", oracle=_fd_oracle(), bench=True)
 def q_fd_report(spark, sf_dir):
     """FD audit over orders: the key-implied dependency plus two
     deliberately false claims, violation mass counted exactly."""
@@ -1230,7 +1230,7 @@ ORDER BY user_id
 """
 
 
-@register("v12_cdc_apply", oracle=_CDC_ORACLE)
+@register("v12_cdc_apply", oracle=_CDC_ORACLE, bench=True)
 def q_cdc_apply(spark, sf_dir):
     """CDC materialization over the events table read as a change log
     (errors = deletes, clicks = updates, the rest = inserts): keys whose
@@ -1330,7 +1330,7 @@ ORDER BY e.event_type
 """
 
 
-@register("v13_mad_outliers", oracle=_MAD_ORACLE)
+@register("v13_mad_outliers", oracle=_MAD_ORACLE, bench=True)
 def q_mad_outliers(spark, sf_dir):
     """Per-event-type robust outlier screen over event values (3-MAD
     gate); medians, MADs, and outlier counts hash-compared."""
@@ -1352,7 +1352,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("v13_mad_outliers_approx", oracle=_MAD_APPROX_ORACLE)
+@register("v13_mad_outliers_approx", oracle=_MAD_APPROX_ORACLE, bench=True)
 def q_mad_outliers_approx(spark, sf_dir):
     """The 100 TB form of the k*MAD gate, CERTIFIED (not just
     documented in v13's docstring): both passes swap the exact
@@ -1622,7 +1622,7 @@ FROM rel ORDER BY fk_name
 """
 
 
-@register("v16_referential_integrity", oracle=_V16_ORACLE)
+@register("v16_referential_integrity", oracle=_V16_ORACLE, bench=True)
 def q_referential_integrity(spark, sf_dir):
     """FK-orphan report over four relationships: the three intact
     TPC-H chains (lineitem->orders->customer->nation) plus the
@@ -1764,7 +1764,7 @@ FROM c, tot GROUP BY 1, 2
 """
 
 
-@register("v17_ks_drift", oracle=_V17_ORACLE)
+@register("v17_ks_drift", oracle=_V17_ORACLE, bench=True)
 def q_ks_drift(spark, sf_dir):
     """Exact KS statistic between first-half-of-month and
     second-half event values — integer-exact max ECDF gap."""
@@ -1786,7 +1786,7 @@ FROM documents
 """
 
 
-@register("v19_observed_metrics", oracle=_V19_ORACLE)
+@register("v19_observed_metrics", oracle=_V19_ORACLE, bench=True)
 def q_observed_metrics(spark, sf_dir):
     """Observed in-flight metrics, driver-certified: a quality gate
     counts rows/pass/violations DURING the downstream job (Spark
@@ -1936,7 +1936,7 @@ ORDER BY 1
 """
 
 
-@register("v20_psi_drift", oracle=_V20_ORACLE)
+@register("v20_psi_drift", oracle=_V20_ORACLE, bench=True)
 def q_psi_drift(spark, sf_dir):
     """PSI between first-half-of-month and second-half event values:
     16 equi-width bins, Laplace-smoothed shares, per-bin terms plus the
@@ -2026,7 +2026,7 @@ ORDER BY 1
 """
 
 
-@register("v21_benford_digits", oracle=_V21_ORACLE)
+@register("v21_benford_digits", oracle=_V21_ORACLE, bench=True)
 def q_benford_digits(spark, sf_dir):
     """Benford first-digit audit of order totals (integer-cents string
     heads, all-ppm integer report)."""
@@ -2086,7 +2086,7 @@ ORDER BY 1, 2
 """
 
 
-@register("v22_time_gap_report", oracle=_V22_ORACLE)
+@register("v22_time_gap_report", oracle=_V22_ORACLE, bench=True)
 def q_time_gap_report(spark, sf_dir):
     """Per-USER activity-gap report (users are the naturally sparse
     key — per-event-type days are gapless at every SF): each row is one
@@ -2223,7 +2223,7 @@ ORDER BY 1
 """
 
 
-@register("pipeline_drift_monitor", oracle=_drift_monitor_oracle())
+@register("pipeline_drift_monitor", oracle=_drift_monitor_oracle(), bench=True)
 def q_drift_monitor(spark, sf_dir):
     """The three drift gates (KS, PSI, L1-ppm) on the first-vs-second
     half-of-month event-value split, as one thresholded verdict table."""

@@ -626,7 +626,7 @@ FROM stepped GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@register("w9_time_weighted_avg", oracle=_TWAP_ORACLE)
+@register("w9_time_weighted_avg", oracle=_TWAP_ORACLE, bench=True)
 def q_time_weighted_avg(spark, sf_dir):
     """Daily TWAP per event type over the events table — exact integer
     microsecond durations, last observation carried to midnight."""
@@ -665,7 +665,7 @@ ORDER BY event_id
 """
 
 
-@register("w10_percentile_normalize", oracle=_W10_ORACLE)
+@register("w10_percentile_normalize", oracle=_W10_ORACLE, bench=True)
 def q_percentile_normalize(spark, sf_dir):
     """Percentile-normalized event values per type (rank-based [0,1]
     scaling, tie-stable cross-engine)."""
@@ -770,7 +770,7 @@ FROM sm ORDER BY 1, 2
 """
 
 
-@register("w11_ewma_smooth", oracle=_W11_ORACLE)
+@register("w11_ewma_smooth", oracle=_W11_ORACLE, bench=True)
 def q_ewma_smooth(spark, sf_dir):
     """8-term EWMA over daily mean event values per type — the
     anomaly-baseline smoother, exact-cents inputs."""
@@ -852,7 +852,7 @@ FROM p2 ORDER BY 1, 2
 """
 
 
-@register("w13_holt_brown", oracle=_W13_ORACLE)
+@register("w13_holt_brown", oracle=_W13_ORACLE, bench=True)
 def q_holt_brown(spark, sf_dir):
     """Brown's double exponential smoothing (level/trend/next-day
     forecast) over daily mean event values per type."""
@@ -948,7 +948,7 @@ FROM errs GROUP BY 1 ORDER BY 1
 """
 
 
-@register("w14_forecast_backtest", oracle=_W14_ORACLE)
+@register("w14_forecast_backtest", oracle=_W14_ORACLE, bench=True)
 def q_forecast_backtest(spark, sf_dir):
     """Per-event-type MAE/bias of the w13 one-step forecast against
     the next present day's actual (integer micro-unit report)."""
@@ -1023,7 +1023,7 @@ FROM lagged ORDER BY 1, 2
 """
 
 
-@register("w12_mom_pct_change", oracle=_W12_ORACLE)
+@register("w12_mom_pct_change", oracle=_W12_ORACLE, bench=True)
 def q_mom_pct_change(spark, sf_dir):
     """Month-over-month revenue % change per order priority (exact
     integer-cents rollup, guarded ratio)."""

@@ -4,6 +4,7 @@ contract (``__spark_entry__.py``).
 Each operator module registers its demonstration queries with
 ``@register(name, oracle=SQL)``; ``collect()`` imports every module so the
 registry is fully populated, then ``__spark_entry__`` exposes it.
+``bench=True`` puts the query in ``bench.py``'s timed set.
 
 Naming convention: query names carry the SURVEY.md §2 operator id they
 demonstrate (e.g. ``w1_abc_classify`` covers W1).
@@ -109,16 +110,19 @@ _QUERY_MODULES = [
 class RegisteredQuery:
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
+    bench: bool = False  # timed by bench.py
 
 
 REGISTRY: dict[str, RegisteredQuery] = {}
 
 
-def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def register(
+    name: str, oracle: str | None = None, bench: bool = False
+) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = RegisteredQuery(fn, oracle)
+        REGISTRY[name] = RegisteredQuery(fn, oracle, bench)
         return fn
 
     return deco
@@ -126,8 +130,5 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 def collect() -> dict[str, RegisteredQuery]:
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet; registry stays partial
+        importlib.import_module(mod)
     return REGISTRY

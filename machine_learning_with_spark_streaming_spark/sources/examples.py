@@ -713,7 +713,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("s19_hive_partitioned_roundtrip", oracle=_S19_ORACLE)
+@register("s19_hive_partitioned_roundtrip", oracle=_S19_ORACLE, bench=True)
 def q_hive_partitioned_roundtrip(spark, sf_dir):
     """Hive-partitioned lake layout: write a scratch clone of ``orders``
     partitioned by ``o_orderpriority`` (directory-encoded values), read
@@ -787,7 +787,7 @@ FROM j
 """
 
 
-@register("s20_malformed_jsonl", oracle=_S20_ORACLE)
+@register("s20_malformed_jsonl", oracle=_S20_ORACLE, bench=True)
 def q_malformed_jsonl(spark, sf_dir):
     """Tolerant JSONL ingest over a committed fixture with broken
     lines: PERMISSIVE mode + ``columnNameOfCorruptRecord`` keeps the
@@ -835,7 +835,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("s21_multiline_json_array", oracle=_S21_ORACLE)
+@register("s21_multiline_json_array", oracle=_S21_ORACLE, bench=True)
 def q_multiline_json_array(spark, sf_dir):
     """API-dump ingest: one JSON ARRAY document spanning many lines
     (the REST-export wire shape, vs s3/s20's line-delimited form) read
@@ -872,7 +872,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@register("s22_dynamic_partition_overwrite", oracle=_S22_ORACLE)
+@register("s22_dynamic_partition_overwrite", oracle=_S22_ORACLE, bench=True)
 def q_dynamic_partition_overwrite(spark, sf_dir):
     """Surgical partition rewrite: with ``partitionOverwriteMode=dynamic``
     an overwrite replaces ONLY the partitions present in the written

@@ -91,7 +91,7 @@ def _register_s25():
     from machine_learning_with_spark_streaming_spark.registry import register
     from machine_learning_with_spark_streaming_spark.schemas import load_table
 
-    @register("s25_python_datasource", oracle=_S25_ORACLE)
+    @register("s25_python_datasource", oracle=_S25_ORACLE, bench=True)
     def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         """S-family beyond-ref: stage a deterministic orders slice as 4
         JSONL files, read it back through the registered CUSTOM Python

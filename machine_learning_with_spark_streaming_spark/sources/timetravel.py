@@ -110,7 +110,7 @@ def _register_s23():
     from machine_learning_with_spark_streaming_spark.registry import register
     from machine_learning_with_spark_streaming_spark.schemas import load_table
 
-    @register("s23_time_travel_read", oracle=_S23_ORACLE)
+    @register("s23_time_travel_read", oracle=_S23_ORACLE, bench=True)
     def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         """S-family beyond-ref: build a 3-snapshot versioned store from
         orders (two date-cut snapshots + full), then READ BACK as-of
@@ -208,7 +208,7 @@ def _register_k10():
     from machine_learning_with_spark_streaming_spark.registry import register
     from machine_learning_with_spark_streaming_spark.schemas import load_table
 
-    @register("k10_snapshot_expire", oracle=_K10_ORACLE)
+    @register("k10_snapshot_expire", oracle=_K10_ORACLE, bench=True)
     def q_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
         """K-family beyond-ref: retention GC over a 4-snapshot store —
         keep the newest 2, purge the rest; the report row-counts come
@@ -318,7 +318,7 @@ def _register_k11():
     from machine_learning_with_spark_streaming_spark.registry import register
     from machine_learning_with_spark_streaming_spark.schemas import load_table
 
-    @register("k11_merge_into", oracle=_K11_ORACLE)
+    @register("k11_merge_into", oracle=_K11_ORACLE, bench=True)
     def q_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         """K-family beyond-ref: MERGE (delete P / update F→M / insert
         post-cut rows) into a snapshot store, then read BOTH versions
@@ -438,7 +438,7 @@ def _register_k12():
     from machine_learning_with_spark_streaming_spark.registry import register
     from machine_learning_with_spark_streaming_spark.schemas import load_table
 
-    @register("k12_write_audit_publish", oracle=_K12_ORACLE)
+    @register("k12_write_audit_publish", oracle=_K12_ORACLE, bench=True)
     def q_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         """K-family beyond-ref: WAP on the snapshot store — a clean
         write audits and publishes (attempt 1); a corrupted write
@@ -532,7 +532,7 @@ def _register_s27():
     from machine_learning_with_spark_streaming_spark.registry import register
     from machine_learning_with_spark_streaming_spark.schemas import load_table
 
-    @register("s27_store_schema_evolution", oracle=_S27_ORACLE)
+    @register("s27_store_schema_evolution", oracle=_S27_ORACLE, bench=True)
     def q_store_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         """S-family beyond-ref: version 2 adds a column; the unified
         history read surfaces version-1 rows with the new column NULL

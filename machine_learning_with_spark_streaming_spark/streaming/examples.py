@@ -272,7 +272,7 @@ def q_stateful_running_totals(spark, sf_dir):
     )
 
 
-@register("s11_tumbling_window_stream", oracle=_S11_TUMBLING_ORACLE)
+@register("s11_tumbling_window_stream", oracle=_S11_TUMBLING_ORACLE, bench=True)
 def q_tumbling_window_stream(spark, sf_dir):
     """§2.10: the tumbling-window aggregate as a REAL 4-micro-batch
     stream (not the batch-mode parity form of ``s11_tumbling_window``).
@@ -840,7 +840,7 @@ ORDER BY 1, 2
 """
 
 
-@register("s11_pack_stream", oracle=_PACK_STREAM_ORACLE)
+@register("s11_pack_stream", oracle=_PACK_STREAM_ORACLE, bench=True)
 def q_pack_stream(spark, sf_dir):
     """Streaming sequence packing as a REAL 4-micro-batch run: the exact
     greedy 512-token walk with its (chunk, used) cursor in the state
@@ -1007,7 +1007,7 @@ def q_incremental_dedup_stream(spark, sf_dir):
     return kept.orderBy("doc_id")
 
 
-@register("s11_session_window_stream", oracle=_S11_SESSION_ORACLE)
+@register("s11_session_window_stream", oracle=_S11_SESSION_ORACLE, bench=True)
 def q_session_window_stream(spark, sf_dir):
     """§2.10: session windows as a REAL 4-micro-batch stream — the
     hardest stateful window: sessions MERGE in the state store when a
@@ -1111,7 +1111,7 @@ FROM kept GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@register("s11_late_data_stream", oracle=_LATE_STREAM_ORACLE)
+@register("s11_late_data_stream", oracle=_LATE_STREAM_ORACLE, bench=True)
 def q_late_data_stream(spark, sf_dir):
     """Watermark late-drop semantics as a REAL multi-micro-batch run,
     certified against an oracle that models Spark's exact drop rule.
@@ -1228,7 +1228,7 @@ FROM ranked WHERE rn = 1 ORDER BY user_id
 """
 
 
-@register("s11_jdbc_upsert_stream", oracle=_JDBC_UPSERT_ORACLE)
+@register("s11_jdbc_upsert_stream", oracle=_JDBC_UPSERT_ORACLE, bench=True)
 def q_jdbc_upsert_stream(spark, sf_dir):
     """The reference's namesake composition end to end: a REAL
     4-micro-batch event stream whose foreachBatch sink maintains a
@@ -1379,7 +1379,7 @@ GROUP BY 1, nn.n_batch ORDER BY 1
 """
 
 
-@register("s11_drift_monitor_stream", oracle=_DRIFT_STREAM_ORACLE)
+@register("s11_drift_monitor_stream", oracle=_DRIFT_STREAM_ORACLE, bench=True)
 def q_drift_monitor_stream(spark, sf_dir):
     """Training-serving drift monitoring on a stream: a REAL
     3-micro-batch run where each arriving batch's value distribution is

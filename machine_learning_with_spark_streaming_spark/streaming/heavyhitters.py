@@ -119,7 +119,7 @@ ORDER BY 1
 """
 
 
-@register("s11_heavy_hitters_stream", oracle=_HH_ORACLE)
+@register("s11_heavy_hitters_stream", oracle=_HH_ORACLE, bench=True)
 def q_heavy_hitters_stream(spark, sf_dir):
     """φ=1/125 heavy hitters over a REAL {N}-micro-batch event stream:
     MG candidate generation in bounded state, exact recount, provably

@@ -75,7 +75,7 @@ ORDER BY 1, 2
 """
 
 
-@register("s11_kmv_distinct_stream", oracle=_KMV_STREAM_ORACLE)
+@register("s11_kmv_distinct_stream", oracle=_KMV_STREAM_ORACLE, bench=True)
 def q_kmv_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL 4-micro-batch run: each batch's KMV partial merges into the
     persisted |keys|·k-row state; every post-batch state is kept as a

@@ -75,7 +75,7 @@ ORDER BY 1
 """
 
 
-@register("s11_merge_into_stream", oracle=_MERGE_STREAM_ORACLE)
+@register("s11_merge_into_stream", oracle=_MERGE_STREAM_ORACLE, bench=True)
 def q_merge_into_stream(spark, sf_dir):
     """Streaming CDC MERGE on a REAL 3-micro-batch run: batch 1 inserts
     the post-cut orders, batch 2 flips pre-cut 'F' rows to 'M', batch 3

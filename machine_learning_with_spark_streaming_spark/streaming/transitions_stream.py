@@ -100,7 +100,7 @@ def transition_stream(stream):
     )
 
 
-@register("s11_transitions_stream", oracle=_S24_ORACLE)
+@register("s11_transitions_stream", oracle=_S24_ORACLE, bench=True)
 def q_transitions_stream(spark, sf_dir):
     """Streaming twin of s24_event_transitions on a REAL 3-micro-batch
     run: last-event-per-user state stitches batch boundaries, so the

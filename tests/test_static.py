@@ -5,7 +5,11 @@ import os
 from collections import Counter
 from pathlib import Path
 
-from machine_learning_with_spark_streaming_spark import session
+import pytest
+
+import __spark_entry__ as entry_mod
+import bench
+from machine_learning_with_spark_streaming_spark import registry, session
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "machine_learning_with_spark_streaming_spark"
@@ -14,6 +18,20 @@ PKG = ROOT / "machine_learning_with_spark_streaming_spark"
 def test_default_driver_memory_fits_host_ram():
     phys_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 20
     assert 0 < int(session._default_driver_memory().removesuffix("m")) < phys_mb
+
+
+def test_collect_raises_on_missing_query_module(monkeypatch):
+    missing = f"{PKG.name}.operators.no_such_module"
+    monkeypatch.setattr(registry, "_QUERY_MODULES", [missing])
+    with pytest.raises(ModuleNotFoundError):
+        registry.collect()
+
+
+def test_bench_names_are_registered():
+    assert set(bench.HEADLINE) <= set(entry_mod.queries())
+    names = bench.benched()
+    assert len(set(names)) == len(names)  # no HEADLINE query is also tagged
+    assert bench.LONG_RUNNERS <= set(names)
 
 
 def _names(code) -> set[str]:

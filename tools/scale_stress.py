@@ -403,6 +403,7 @@ def main() -> None:
         return
 
     import __spark_entry__ as entry_mod
+    from bench import measure
     from machine_learning_with_spark_streaming_spark.session import get_session
 
     spark = get_session(
@@ -420,19 +421,10 @@ def main() -> None:
     out: dict[str, object] = {}
     for n in names:
         try:
-            queries[n](spark, dst).write.format("noop").mode("overwrite").save()
-            best = None
-            for _ in range(runs):  # min-of-N, like bench.py: damps JIT/GC noise
-                spark.catalog.clearCache()  # self-contained timing
-                t0 = time.time()
-                queries[n](spark, dst).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            out[n] = round(best, 2)
+            # min-of-N, like bench.py: damps JIT/GC noise
+            out[n] = round(measure(spark, queries[n], dst, runs)[0][0], 2)
         except Exception as exc:  # noqa: BLE001
             out[n] = f"ERR {type(exc).__name__}: {exc}"[:120]
-        finally:
-            spark.catalog.clearCache()
     print(json.dumps({"metric": "scale_stress_sec", "dir": dst, "queries": out}))
 
 
