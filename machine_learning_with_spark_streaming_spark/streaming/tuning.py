@@ -1,107 +1,99 @@
-"""Stream execution tuning: right-size stateful-shuffle partitioning.
+"""Stream execution tuning: run each stateful micro-batch stream at state
+width 1.
 
-Structured Streaming fixes the state-store partition count at the first
-micro-batch from ``spark.sql.shuffle.partitions`` and then pays per
-batch, per stateful operator, per partition: a state-store commit (delta
-file + maintenance) and a shuffle task. That cost is pure overhead when
-per-batch volume is small — locally, 32 state partitions for ~1 MB
-batches made every micro-batch run 3-4x slower than 4-8 partitions
-(measured on s11_tumbling_window_stream at sf0.1: 9.5 s at 32, 4.0 s at
-8, 2.6 s at 4) — and on a real cluster the guide's sizing rule
-(§2.2 "fewer, larger partitions", 100 MB-1 GB of state per partition)
-ties the number to stream THROUGHPUT, not to the core count of whatever
-machine started the query.
+Structured Streaming fixes a query's state-store partition count from
+``spark.sql.shuffle.partitions`` when the query first starts (it is kept
+in the checkpoint, so a restart keeps it too) and then pays, for every
+micro-batch, every stateful operator and every partition, one shuffle
+task and one state-store commit. Locally those floors dominate a small
+stream: a Python-UDF task costs about 0.2 CPU-s whatever its row count,
+and without a native Hadoop library every state, checkpoint and crc
+file forks a ``chmod``. The package's streams keep little state (the
+benchmark's two stream ops hold 1.4 MB at sf0.1), so their width is 1,
+not the core count of the machine that started them.
 
-``stream_shuffle`` scopes that decision: inside the context,
-``spark.sql.shuffle.partitions`` is set from ``$SPARK_GRAFT_STREAM_SHUFFLE``
-(production knob — size to state volume / throughput) with a local
-default of min(4, cpus); the previous value is always restored, so batch
-queries in the same session keep their own partitioning. Results are
-invariant: every stateful operator hash-partitions by its grouping/join
-key, so the partition COUNT changes placement and overhead only, never
-values — re-certified against the DuckDB oracles for every registered
-stream query.
+``start_and_await`` (the one place the package starts a stream writer)
+picks the width, in this order:
+
+1. ``$SPARK_GRAFT_STREAM_SHUFFLE``, when set;
+2. an explicit ``partitions=`` (``python_stateful_partitions`` for
+   Python groups whose per-group work parallelises);
+3. 1, when the plan keeps state: an aggregate, a dedup or a per-group
+   state node over a stream, or a join of two streams;
+4. otherwise the session width, unchanged: a stateless stream has no
+   state store, and its shuffles are batch-sized work.
+
+The width covers every job of the run, not only the state store: the
+query copies the session when it starts, so the body of a
+``foreachBatch`` sink also plans its shuffles at that width (under AQE,
+which coalesces but never widens). The session value is restored
+afterwards, also when the start fails.
+
+Results do not depend on the width: every stateful operator
+hash-partitions by its grouping or join key, so the partition count
+moves placement and per-task overhead only, never values.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
-from typing import Iterator
 
 from pyspark.sql import SparkSession
 
+_SHUFFLE = "spark.sql.shuffle.partitions"
 
-def stream_state_partitions() -> int:
-    """State-store partition count for micro-batch runs.
-
-    ``$SPARK_GRAFT_STREAM_SHUFFLE`` overrides (a cluster deployment sizes
-    this to sustained state volume: state bytes / ~256 MB, floored at the
-    sink parallelism it needs); local default min(4, $SPARK_GRAFT_CPUS)
-    keeps small-batch overhead bounded without serializing multi-core
-    batches.
-    """
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return max(1, int(env))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # min(4, cpus): measured on the benched stream set at sf0.1 —
-    # 32 partitions 81.8 s total, 8 -> 68.4 s, 4 -> a further ~8% off
-    # the heaviest runs (late_data 17.1 -> 14.4, session 10.7 -> 9.5)
-    # with no query slower outside the noise band.
-    return max(2, min(4, cpus))
+# logical nodes that hold state when they run over a stream
+_STATEFUL = {
+    "Aggregate",
+    "Deduplicate",
+    "DeduplicateWithinWatermark",
+    "FlatMapGroupsWithState",
+    "FlatMapGroupsInPandasWithState",
+}
 
 
 def python_stateful_partitions() -> int:
-    """State-store partition count for PYTHON-stateful micro-batch runs
-    (``applyInPandasWithState``) whose group count is large.
+    """State-store partition count for Python-stateful micro-batch runs
+    (``applyInPandasWithState``) with many groups.
 
-    The default ``stream_state_partitions`` sizing (min(4, cpus)) was
-    measured on JVM-only stateful aggregates, where per-partition state
-    commits dominate and fewer partitions win. A Python-grouped stream
-    with many groups is bounded by PER-GROUP Python/Arrow work instead,
-    which parallelizes with the partition count: measured on
-    s11_transitions_stream (1500 user groups, sf0.1) the 3-batch run is
-    6.3 s at 4 partitions vs 3.5 s at 16 (r11, guide §4 — the Python
-    boundary is the cost; more workers amortize it). Cluster sizing
-    follows the same rule as the env override: groups-per-partition
-    times per-group cost is the batch critical path, so size to Python
-    worker throughput, floored by the JVM-state commit overhead.
-    ``$SPARK_GRAFT_STREAM_SHUFFLE`` still overrides both defaults.
+    Such a stream is bound by per-group Python/Arrow work, which
+    parallelises with the partition count, not by per-partition commits:
+    s11_transitions_stream (1500 user groups, sf0.1) ran 6.3 s at 4
+    partitions vs 3.5 s at 16 on 32 cores, and on 4 cores 14.6-15.0 s
+    at width 1 vs 6.5-8.1 s at this width.
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return max(1, int(env))
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return max(2, min(16, cpus))
 
 
+def _keeps_state(plan) -> bool:
+    """Whether a logical plan holds state across micro-batches."""
+    kids = []
+    it = plan.children().iterator()
+    while it.hasNext():
+        kids.append(it.next())
+    if plan.isStreaming():
+        name = plan.nodeName()
+        if name in _STATEFUL or (name == "Join" and all(k.isStreaming() for k in kids)):
+            return True
+    return any(_keeps_state(k) for k in kids)
+
+
 def start_and_await(writer, spark: SparkSession, partitions: int | None = None):
-    """Start a ``DataStreamWriter`` under the stream-state partition
-    sizing and block until the run completes (the repo's micro-batch
-    runs all use ``trigger(availableNow=True)``). The partition count is
-    captured by the query at start, so the scope only needs to cover
-    start-to-termination; the session value is restored for the batch
-    post-processing that follows. ``partitions`` overrides the default
-    JVM-state sizing (see ``python_stateful_partitions``)."""
-    with stream_shuffle(spark, partitions):
+    """Start a ``DataStreamWriter`` at its state width (module docstring)
+    and block until the run completes (the package's micro-batch runs
+    all use ``trigger(availableNow=True)``)."""
+    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
+    if env:
+        partitions = int(env)
+    elif partitions is None and _keeps_state(writer._df._jdf.logicalPlan()):
+        partitions = 1
+    old = spark.conf.get(_SHUFFLE)
+    if partitions is not None:
+        spark.conf.set(_SHUFFLE, str(max(1, partitions)))
+    try:
         q = writer.start()
         q.awaitTermination()
-    return q
-
-
-@contextmanager
-def stream_shuffle(
-    spark: SparkSession, partitions: int | None = None
-) -> Iterator[None]:
-    """Scope ``spark.sql.shuffle.partitions`` to the stream-state sizing
-    for the duration of a micro-batch run; always restores the previous
-    session value (batch plans outside the stream are untouched)."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    n = partitions if partitions is not None else stream_state_partitions()
-    spark.conf.set(key, str(n))
-    try:
-        yield
     finally:
-        spark.conf.set(key, old)
+        spark.conf.set(_SHUFFLE, old)
+    return q

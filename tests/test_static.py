@@ -78,3 +78,39 @@ def test_every_package_definition_is_referenced():
         if uses[c.co_name] == (c.co_name in own)
     ]
     assert not unused, unused
+
+
+def _attr_loads(code):
+    """The attribute names each code object in ``code`` loads."""
+    yield {
+        i.argval
+        for i in dis.get_instructions(code)
+        if i.opname in ("LOAD_ATTR", "LOAD_METHOD")
+    }
+    for c in code.co_consts:
+        if hasattr(c, "co_names"):
+            yield from _attr_loads(c)
+
+
+def _starts_a_stream(source: str) -> bool:
+    """Whether a function in ``source`` starts a stream writer: it awaits
+    a query or starts one into a table, or reads ``writeStream`` and calls
+    ``start``. Only attribute loads count, not strings or other names."""
+    return any(
+        attrs & {"awaitTermination", "toTable"} or {"writeStream", "start"} <= attrs
+        for attrs in _attr_loads(compile(source, "<source>", "exec"))
+    )
+
+
+def test_streams_start_only_through_start_and_await():
+    # a stream started anywhere else would skip start_and_await's width
+    tuning = PKG / "streaming" / "tuning.py"
+    files = [*PKG.rglob("*.py"), *ROOT.glob("tools/*.py"), ROOT / "bench.py"]
+    offenders = [
+        str(f.relative_to(ROOT))
+        for f in files
+        if f != tuning and _starts_a_stream(f.read_text())
+    ]
+    assert not offenders, offenders
+    assert _starts_a_stream("def f(df):\n    df.writeStream.format('memory').start()")
+    assert not _starts_a_stream("F.col('start'); threading.Thread().start(); m.start()")

@@ -105,6 +105,40 @@ def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
     assert row[0]["ts"].timestamp() == _TS0  # offset 0, not the replay's 21
 
 
+def test_restart_keeps_the_checkpoint_width(spark, tmp_path):
+    """The state width is fixed by the first start and kept in the
+    checkpoint: a restart asking for another width keeps the first one,
+    and keyed dedup still admits each key exactly once."""
+    from machine_learning_with_spark_streaming_spark.streaming.tuning import (
+        start_and_await,
+    )
+
+    stage, ckpt, out = (str(tmp_path / d) for d in ("stage", "ckpt", "out"))
+    os.makedirs(stage)
+
+    def run(files, partitions):
+        for rows in files:
+            _file(stage, len(os.listdir(stage)), rows)
+        writer = (
+            spark.readStream.schema(SCHEMA_DDL)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+            .dropDuplicates(["user_id", "event_type"])
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+        )
+        q = start_and_await(writer, spark, partitions=partitions)
+        return [op["numShufflePartitions"] for op in q.lastProgress["stateOperators"]]
+
+    assert run(_PASS1, partitions=1) == [1]
+    assert run(_PASS2, partitions=3) == [1]
+    keys = [(r.user_id, r.event_type) for r in spark.read.parquet(out).collect()]
+    assert len(keys) == len(set(keys)) == _DISTINCT_KEYS
+
+
 def test_packer_cursor_survives_query_restart(spark, tmp_path):
     """The packer's (chunk, used) cursor must come back from the
     CHECKPOINTED state store when the query itself dies and restarts:

@@ -285,6 +285,9 @@ def stream_stress(spark, dst: str, files_per_trigger: list[int]) -> dict:
     from machine_learning_with_spark_streaming_spark.streaming.stateful import (
         streaming_packer,
     )
+    from machine_learning_with_spark_streaming_spark.streaming.tuning import (
+        start_and_await,
+    )
 
     docs = load_table(spark, dst, "documents").select(
         "doc_id", "source", F.size(words("text")).cast("long").alias("n_tokens")
@@ -321,9 +324,8 @@ def stream_stress(spark, dst: str, files_per_trigger: list[int]) -> dict:
             .outputMode("update")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        start_and_await(q, spark)
         dt = time.time() - t0
         out = spark.table(sink)
         chunks = {
