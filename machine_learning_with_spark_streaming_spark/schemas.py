@@ -124,20 +124,16 @@ def _scan_spread(
     if name not in SPREAD_TABLES:
         return df
     par = spark.sparkContext.defaultParallelism
-    # r12 hardening (ADVICE/VERDICT item): the spread DECISION is pure
-    # metadata — cache it per (path, mtime, size, parallelism) so repeat
-    # loads skip both the plan→RDD conversion (df.rdd) and the pyarrow
-    # footer read, and make the metadata read directory-aware (a table
-    # on a cluster is a directory of files; the single-file assumption
-    # would raise IsADirectoryError exactly in the few-huge-files case
-    # the spread targets). Any metadata failure falls back to no spread
-    # — the scan is still correct, just narrow — and is not cached, so
-    # the next load retries the read.
-    import os
-
+    # The spread DECISION is pure metadata: cache it per (parquet file
+    # stats, parallelism) so repeat loads skip both the plan→RDD
+    # conversion (df.rdd) and the pyarrow footer reads. The key holds the
+    # (path, mtime, size) of every parquet file of the table, so a
+    # rewrite anywhere in a directory table (a nested partition directory
+    # included) is a new key. Any metadata failure falls back to no
+    # spread — the scan is still correct, just narrow — and is not
+    # cached, so the next load retries the read.
     try:
-        st = os.stat(path)
-        cache_key = (os.path.abspath(path), st.st_mtime_ns, st.st_size, par)
+        cache_key = (_parquet_files(path), par)
     except OSError:
         return df
     target = _SPREAD_CACHE.get(cache_key)
@@ -145,7 +141,7 @@ def _scan_spread(
         import math
 
         try:
-            n_rows, n_bytes = _parquet_meta(path)
+            n_rows, n_bytes = _parquet_meta(cache_key[0])
             cur = df.rdd.getNumPartitions()
         except Exception:
             return df
@@ -171,25 +167,31 @@ def _scan_spread(
     return df.repartition(target) if target else df
 
 
-#: (abspath, mtime_ns, size, parallelism) -> repartition width (0 = none)
+#: (parquet file stats, parallelism) -> repartition width (0 = none)
 _SPREAD_CACHE: dict[tuple, int] = {}
 
 
-def _parquet_meta(path: str) -> tuple[int, int]:
-    """(n_rows, n_bytes) for a parquet file OR directory of files."""
+def _parquet_files(path: str) -> tuple[tuple[str, int, int], ...]:
+    """(abspath, mtime_ns, size) of a parquet file, or of every parquet
+    file under a directory table, in path order."""
     import os
 
-    if os.path.isdir(path):
-        rows = size = 0
-        for root, _dirs, files in os.walk(path):
-            for fn in files:
-                if not fn.endswith(".parquet"):
-                    continue
-                fp = os.path.join(root, fn)
-                rows += pq_file_rows(fp)
-                size += os.path.getsize(fp)
-        return rows, size
-    return pq_file_rows(path), os.path.getsize(path)
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((os.path.abspath(path), st.st_mtime_ns, st.st_size),)
+    found = []
+    for root, _dirs, files in os.walk(path):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                fp = os.path.abspath(os.path.join(root, fn))
+                st = os.stat(fp)
+                found.append((fp, st.st_mtime_ns, st.st_size))
+    return tuple(sorted(found))
+
+
+def _parquet_meta(files: tuple[tuple[str, int, int], ...]) -> tuple[int, int]:
+    """(n_rows, n_bytes) of the files ``_parquet_files`` lists."""
+    return sum(pq_file_rows(fp) for fp, _, _ in files), sum(n for _, _, n in files)
 
 
 def pq_file_rows(path: str) -> int:

@@ -6,9 +6,12 @@ Structured Streaming fixes a query's state-store partition count from
 in the checkpoint, so a restart keeps it too) and then pays, for every
 micro-batch, every stateful operator and every partition, one shuffle
 task and one state-store commit. Locally those floors dominate a small
-stream: a Python-UDF task costs about 0.2 CPU-s whatever its row count,
-and without a native Hadoop library every state, checkpoint and crc
-file forks a ``chmod``. The package's streams keep little state (the
+stream, also with ``get_session``'s worker daemon and checkpoint manager
+in place: a Python-UDF task still costs 0.05-0.08 CPU-s of the whole
+session (0.03 of it in the Python worker) whatever its row count, and
+one benchmark stream op forks 74-76 ``chmod`` processes, one per
+checkpoint, state or crc file and directory it creates (there is no
+native Hadoop library). The package's streams keep little state (the
 benchmark's two stream ops hold 1.4 MB at sf0.1), so their width is 1,
 not the core count of the machine that started them.
 
@@ -59,8 +62,9 @@ def python_stateful_partitions() -> int:
     Such a stream is bound by per-group Python/Arrow work, which
     parallelises with the partition count, not by per-partition commits:
     s11_transitions_stream (1500 user groups, sf0.1) ran 6.3 s at 4
-    partitions vs 3.5 s at 16 on 32 cores, and on 4 cores 14.6-15.0 s
-    at width 1 vs 6.5-8.1 s at this width.
+    partitions vs 3.5 s at 16 on 32 cores. On 4 cores, with the Python
+    task floor down to 0.03 CPU-s of worker time (``pyworker``), it
+    still runs 16.0-16.1 s at width 1 vs 7.6-8.2 s at this width.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return max(2, min(16, cpus))

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -130,16 +132,33 @@ def test_scan_spread_directory_layout_no_raise(spark, tmp_path, monkeypatch):
     df = spark.read.parquet(path)
     out = schemas._scan_spread(spark, df, path, "documents")
     assert out.count() == 2000
-    st = os.stat(path)
-    key = (
-        os.path.abspath(path),
-        st.st_mtime_ns,
-        st.st_size,
-        spark.sparkContext.defaultParallelism,
-    )
-    assert key in schemas._SPREAD_CACHE
-    rows, size = schemas._parquet_meta(path)
+    files = schemas._parquet_files(path)
+    assert len(files) == 2
+    assert (files, spark.sparkContext.defaultParallelism) in schemas._SPREAD_CACHE
+    rows, size = schemas._parquet_meta(files)
     assert rows == 2000 and size > 0
+
+    # a rewrite inside a nested partition directory leaves the top
+    # directory's stat alone, and must still not serve the old decision
+    nested = os.path.join(str(tmp_path), "nested.parquet")
+    part = os.path.join(nested, "k=0")
+    os.makedirs(part)
+
+    def write_part(n):
+        table = pa.table({"doc_id": list(range(n)), "text": ["t"] * n})
+        pq.write_table(table, os.path.join(part, "part-0.parquet"))
+
+    write_part(100)
+    small = spark.read.parquet(nested)
+    assert schemas._scan_spread(spark, small, nested, "documents") is small
+    top = os.stat(nested)
+    write_part(2000)
+    assert (os.stat(nested).st_mtime_ns, os.stat(nested).st_size) == (
+        top.st_mtime_ns,
+        top.st_size,
+    )
+    big = spark.read.parquet(nested)
+    assert schemas._scan_spread(spark, big, nested, "documents") is not big
 
     # a failed metadata read is not cached, so a later load can spread
     one = os.path.join(str(tmp_path), "one.parquet")
